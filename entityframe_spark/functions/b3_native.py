@@ -1,36 +1,30 @@
-"""BLAKE3 hashing kernels: C (ctypes, compiled once per host) with a
-pure-Python spec implementation as the compiler-less fallback.
+"""BLAKE3 hashing kernel in C (ctypes).
 
 Closes the one `partial` in SURVEY §2 coverage (F1): the reference
 lists blake3 among its entity-hash algorithms
 (/root/reference/docs/design/interface.md:547-552; the Rust core pulls
 the `blake3` crate in src/rust/starlings-core/Cargo.toml) but no
-blake3 wheel exists in this container. Both implementations here are
-written from the public BLAKE3 specification ("BLAKE3: one function,
-fast everywhere", O'Connor, Aumasson, Neves, Wilcox-O'Hearn, 2020) —
-default hash mode, 32-byte output. They are structured differently on
-purpose (recursive subtree split in C, reference-style chunk loop in
-Python) so a transcription slip in one cannot silently agree with the
-other; tests/test_b3_native.py pins them against each other across
+blake3 wheel exists in this container. The kernel is written from the
+public BLAKE3 specification ("BLAKE3: one function, fast everywhere",
+O'Connor, Aumasson, Neves, Wilcox-O'Hearn, 2020) — default hash mode,
+32-byte output. tests/ hold a pure-Python spec implementation that is
+structured differently on purpose (chunk-stack loop there, recursive
+subtree split here) so a transcription slip in one cannot silently
+agree with the other; they are pinned against each other across
 chunk/block boundaries and against the published test vectors for the
 empty and one-byte inputs.
 
-Deployment matches jw_native/uf_native: lazy compile into the per-user
-0700 cache dir (atomic rename, ownership-verified before dlopen);
-executors without a compiler fall back to the Python path.
+The shared object is loaded by ``functions.native``, like every kernel
+here.
 """
 
 from __future__ import annotations
 
 import ctypes
-import hashlib
-import os
-import struct
-import subprocess
 
 import numpy as np
 
-from entityframe_spark.functions.jw_native import _cache_dir
+from entityframe_spark.functions.native import Kernel
 
 _C_SOURCE = r"""
 #include <stdint.h>
@@ -195,177 +189,36 @@ void b3_hash_batch(const uint8_t* buf, const int64_t* starts,
 }
 """
 
-_lib = None
-_tried = False
+_U8P = ctypes.POINTER(ctypes.c_uint8)
+_I64P = ctypes.POINTER(ctypes.c_int64)
 
-
-def _compile() -> "ctypes.CDLL | None":
-    digest = hashlib.sha256(_C_SOURCE.encode()).hexdigest()[:16]
-    so_path = os.path.join(_cache_dir(), f"ef_b3_{digest}.so")
-    if not os.path.exists(so_path):
-        src = so_path + f".{os.getpid()}.c"
-        tmp_so = so_path + f".{os.getpid()}.tmp"
-        with open(src, "w") as f:
-            f.write(_C_SOURCE)
-        try:
-            subprocess.run(
-                ["cc", "-O3", "-shared", "-fPIC", "-o", tmp_so, src],
-                check=True,
-                capture_output=True,
-                timeout=60,
-            )
-            os.replace(tmp_so, so_path)  # atomic: concurrent workers race safely
-        finally:
-            for p in (src, tmp_so):
-                try:
-                    os.unlink(p)
-                except OSError:
-                    pass
-    st = os.stat(so_path)
-    if st.st_uid != os.getuid():
-        raise RuntimeError(f"{so_path} not owned by current user; refusing to dlopen")
-    lib = ctypes.CDLL(so_path)
-    U8P = ctypes.POINTER(ctypes.c_uint8)
-    I64P = ctypes.POINTER(ctypes.c_int64)
-    lib.b3_hash_batch.argtypes = [U8P, I64P, I64P, ctypes.c_int64, U8P]
-    lib.b3_hash_batch.restype = None
-    return lib
-
-
-def native_available() -> bool:
-    global _lib, _tried
-    if not _tried:
-        _tried = True
-        try:
-            _lib = _compile()
-        except Exception:
-            _lib = None
-    return _lib is not None
+KERNEL = Kernel(
+    "b3",
+    _C_SOURCE,
+    {"b3_hash_batch": ([_U8P, _I64P, _I64P, ctypes.c_int64, _U8P], None)},
+)
 
 
 def blake3_hex_batch(values: list[bytes]) -> list[str]:
-    """BLAKE3 hex digests for a batch of byte strings — C kernel when
-    available, pure-Python spec implementation otherwise."""
-    if native_available():
-        n = len(values)
-        if n == 0:
-            return []
-        lens = np.fromiter((len(v) for v in values), dtype=np.int64, count=n)
-        ends = np.cumsum(lens)
-        starts = ends - lens
-        buf = np.frombuffer(b"".join(values), dtype=np.uint8) if ends[-1] else np.empty(
-            0, dtype=np.uint8
-        )
-        # frombuffer is zero-copy but read-only; the kernel only reads buf
-        out = np.empty(n * 32, dtype=np.uint8)
-        _lib.b3_hash_batch(
-            buf.ctypes.data_as(ctypes.POINTER(ctypes.c_uint8)),
-            starts.ctypes.data_as(ctypes.POINTER(ctypes.c_int64)),
-            ends.ctypes.data_as(ctypes.POINTER(ctypes.c_int64)),
-            n,
-            out.ctypes.data_as(ctypes.POINTER(ctypes.c_uint8)),
-        )
-        raw = out.tobytes()
-        return [raw[i * 32 : (i + 1) * 32].hex() for i in range(n)]
-    return [blake3_hex_py(v) for v in values]
-
-
-# ---------------------------------------------------------------------------
-# Pure-Python spec implementation (fallback + property-test oracle).
-# Follows the spec's sequential chunk-stack shape, deliberately NOT the
-# recursive split the C kernel uses.
-
-_IV = (
-    0x6A09E667, 0xBB67AE85, 0x3C6EF372, 0xA54FF53A,
-    0x510E527F, 0x9B05688C, 0x1F83D9AB, 0x5BE0CD19,
-)
-_PERM = (2, 6, 3, 10, 7, 0, 4, 13, 1, 11, 12, 5, 9, 14, 15, 8)
-_CHUNK_START, _CHUNK_END, _PARENT, _ROOT = 1, 2, 4, 8
-_M32 = 0xFFFFFFFF
-
-
-def _rotr(x: int, n: int) -> int:
-    return ((x >> n) | (x << (32 - n))) & _M32
-
-
-def _g(s: list[int], a: int, b: int, c: int, d: int, mx: int, my: int) -> None:
-    s[a] = (s[a] + s[b] + mx) & _M32
-    s[d] = _rotr(s[d] ^ s[a], 16)
-    s[c] = (s[c] + s[d]) & _M32
-    s[b] = _rotr(s[b] ^ s[c], 12)
-    s[a] = (s[a] + s[b] + my) & _M32
-    s[d] = _rotr(s[d] ^ s[a], 8)
-    s[c] = (s[c] + s[d]) & _M32
-    s[b] = _rotr(s[b] ^ s[c], 7)
-
-
-def _compress(
-    cv: tuple[int, ...], block: tuple[int, ...], counter: int, block_len: int, flags: int
-) -> list[int]:
-    s = list(cv) + list(_IV[:4]) + [
-        counter & _M32,
-        (counter >> 32) & _M32,
-        block_len,
-        flags,
-    ]
-    m = list(block)
-    for r in range(7):
-        _g(s, 0, 4, 8, 12, m[0], m[1])
-        _g(s, 1, 5, 9, 13, m[2], m[3])
-        _g(s, 2, 6, 10, 14, m[4], m[5])
-        _g(s, 3, 7, 11, 15, m[6], m[7])
-        _g(s, 0, 5, 10, 15, m[8], m[9])
-        _g(s, 1, 6, 11, 12, m[10], m[11])
-        _g(s, 2, 7, 8, 13, m[12], m[13])
-        _g(s, 3, 4, 9, 14, m[14], m[15])
-        if r < 6:
-            m = [m[p] for p in _PERM]
-    return [s[i] ^ s[i + 8] for i in range(8)] + [
-        s[i + 8] ^ cv[i] for i in range(8)
-    ]
-
-
-def _words(chunk64: bytes) -> tuple[int, ...]:
-    return struct.unpack("<16I", chunk64.ljust(64, b"\x00"))
-
-
-def _chunk_output(data: bytes, t: int) -> tuple[tuple[int, ...], tuple[int, ...], int, int]:
-    """Process all but the final block of one chunk; return
-    (cv, final_block_words, final_block_len, final_flags_sans_root)."""
-    cv: tuple[int, ...] = _IV
-    blocks = [data[i : i + 64] for i in range(0, len(data), 64)] or [b""]
-    for i, blk in enumerate(blocks[:-1]):
-        flags = _CHUNK_START if i == 0 else 0
-        cv = tuple(_compress(cv, _words(blk), t, len(blk), flags)[:8])
-    last = blocks[-1]
-    flags = _CHUNK_END | (_CHUNK_START if len(blocks) == 1 else 0)
-    return cv, _words(last), len(last), flags
-
-
-def blake3_hex_py(data: bytes) -> str:
-    """BLAKE3 hex digest (default hash mode, 32 bytes), pure Python."""
-    chunks = [data[i : i + 1024] for i in range(0, len(data), 1024)] or [b""]
-    if len(chunks) == 1:
-        cv, blk, blen, flags = _chunk_output(chunks[0], 0)
-        out = _compress(cv, blk, 0, blen, flags | _ROOT)
-        return struct.pack("<8I", *out[:8]).hex()
-    # chunk-stack: after chunk t completes, merge once per trailing one
-    # bit of (t+1) — the left-complete tree the spec defines
-    stack: list[tuple[int, ...]] = []
-    for t, ch in enumerate(chunks):
-        cv, blk, blen, flags = _chunk_output(ch, t)
-        cv = tuple(_compress(cv, blk, t, blen, flags)[:8])
-        if t == len(chunks) - 1:
-            # final chunk: fold the whole stack, ROOT on the last merge
-            while len(stack) > 1:
-                cv = tuple(
-                    _compress(_IV, stack.pop() + cv, 0, 64, _PARENT)[:8]
-                )
-            out = _compress(_IV, stack.pop() + cv, 0, 64, _PARENT | _ROOT)
-            return struct.pack("<8I", *out[:8]).hex()
-        total = t + 1
-        while total & 1 == 0:
-            cv = tuple(_compress(_IV, stack.pop() + cv, 0, 64, _PARENT)[:8])
-            total >>= 1
-        stack.append(cv)
-    raise AssertionError("unreachable")
+    """BLAKE3 hex digests for a batch of byte strings."""
+    lib = KERNEL.lib
+    n = len(values)
+    if n == 0:
+        return []
+    lens = np.fromiter((len(v) for v in values), dtype=np.int64, count=n)
+    ends = np.cumsum(lens)
+    starts = ends - lens
+    buf = np.frombuffer(b"".join(values), dtype=np.uint8) if ends[-1] else np.empty(
+        0, dtype=np.uint8
+    )
+    # frombuffer is zero-copy but read-only; the kernel only reads buf
+    out = np.empty(n * 32, dtype=np.uint8)
+    lib.b3_hash_batch(
+        buf.ctypes.data_as(_U8P),
+        starts.ctypes.data_as(_I64P),
+        ends.ctypes.data_as(_I64P),
+        n,
+        out.ctypes.data_as(_U8P),
+    )
+    raw = out.tobytes()
+    return [raw[i * 32 : (i + 1) * 32].hex() for i in range(n)]

@@ -42,8 +42,8 @@ def entity_hashes(
     """Per-entity digests over the sorted-member canonical string.
 
     sha256/sha512 via built-in sha2, md5 via built-in md5 (zero
-    Python); blake3 via an Arrow-batched pandas UDF when the wheel is
-    available, else omitted.
+    Python); blake3 via an Arrow-batched pandas UDF (the wheel when
+    installed, else the b3_native C kernel).
     Returns (cluster_id, members, entity_size, <algo> hex columns).
     """
     ents = _canonical_members(partition.join(records, "record_id"))
@@ -57,9 +57,8 @@ def entity_hashes(
         elif algo == "md5":
             out = out.withColumn("md5", F.md5(canon))
         elif algo == "blake3":
-            # wheel when installed; else the repo's own spec
-            # implementation (b3_native: C kernel with pure-Python
-            # fallback, pinned to the published test vectors) — the
+            # wheel when installed; else the repo's own C kernel
+            # (b3_native, pinned to the published test vectors) — the
             # algorithm no longer degrades to a stand-in anywhere
             @F.pandas_udf(StringType())
             def _b3(s: pd.Series) -> pd.Series:
@@ -76,7 +75,7 @@ def entity_hashes(
 
             out = out.withColumn("blake3", _b3(canon))
         elif algo == "blake2b":
-            # documented fallback for environments without the blake3
+            # documented stand-in for environments without the blake3
             # wheel (interface.md:547-552 lists blake3; blake2b is the
             # stdlib BLAKE-family equivalent, 256-bit digest here)
             import hashlib
@@ -154,7 +153,7 @@ def map_entities(
     fn: Callable,
     schema: str,
 ) -> DataFrame:
-    """partition.map(custom_callable) fallback
+    """partition.map(custom_callable) for arbitrary Python functions
     (interface.md:507-524): apply a per-entity pandas function over
     groupBy(cluster_id).applyInPandas. ``fn`` receives the entity's
     rows (record_id, source, key, cluster_id) and returns a pandas

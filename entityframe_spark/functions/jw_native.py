@@ -1,33 +1,33 @@
-"""Native (C, via ctypes) Jaro-Winkler batch kernel.
+"""Native (C, via ctypes) pair-scoring and LSH kernels.
 
-Why this exists: the Arrow-batched numpy implementation in
-``similarity.jaro_winkler_batch`` is algorithmically fine, but this
-host's numpy pays ~1000x on every FRESH allocation (first-touch page
-zeroing; even ``np.arange`` of 200k elements takes ~0.3s), and the
-batch algorithm allocates O(positions) temporaries per batch —
-measured ~1.3k pairs/s/core, which made the scoring stage the q1
-bottleneck (37s of a 104s query). The C kernel is the textbook scalar
-Jaro-Winkler (bit-for-bit the semantics of ``similarity._jaro_winkler``,
-property-tested against it) with zero heap allocation per pair; it
-runs at >200k pairs/s/core.
+Why this exists: per-pair string similarity in Python or numpy was
+the q1 bottleneck (this host's numpy pays ~1000x on every FRESH
+allocation, and a batch Jaro-Winkler allocates O(positions)
+temporaries per batch — measured ~1.3k pairs/s/core). One C pass per
+Arrow batch computes every scoring feature with no heap allocation
+per pair (>200k pairs/s/core):
 
-Deployment: the ~60-line C source is compiled lazily, once per host,
-into a content-addressed ``.so`` under /tmp (atomic rename, so
-concurrent Python workers race safely). On a multi-executor cluster
-each executor host compiles on first use — gcc/cc is assumed present
-(standard on cluster images); if compilation fails the caller falls
-back to the numpy batch path transparently.
+- ``score_batch`` / ``score_batch_gather``: gram and token set
+  intersect sizes (exact ``size(array_intersect)`` semantics), the
+  normalised Levenshtein similarity of Spark's built-in
+  ``levenshtein`` and the textbook scalar Jaro-Winkler, both over
+  capped prefixes;
+- ``lsh_band_hashes``: shingle -> crc32 -> MinHash -> band hashes.
+
+tests/ pin every kernel against scalar reference implementations and
+against the JVM expressions. The shared object is loaded (cached,
+shipped prebuilt in the --py-files zip, or compiled with cc) by
+``functions.native``; a worker that can do none of these raises on
+first use.
 """
 
 from __future__ import annotations
 
 import ctypes
-import hashlib
-import os
-import subprocess
-import tempfile
 
 import numpy as np
+
+from entityframe_spark.functions.native import Kernel
 
 _C_SOURCE = r"""
 #include <stdint.h>
@@ -289,44 +289,6 @@ static double lev_one(const uint32_t* s1, int l1, const uint32_t* s2, int l2)
     return 1.0 - lev_dist(s1, l1, s2, l2) / (double)mx;
 }
 
-void jw_batch(const uint32_t* A, const uint32_t* B,
-              const int32_t* la, const int32_t* lb,
-              int64_t n, int32_t width, double prefix_weight,
-              double* out)
-{
-    for (int64_t r = 0; r < n; r++) {
-        out[r] = jw_one(A + r * (int64_t)width, la[r],
-                        B + r * (int64_t)width, lb[r], prefix_weight);
-    }
-}
-
-/* Combined scoring kernel: Levenshtein similarity over the full
-   (<= width) prefixes and Jaro-Winkler over the first jw_max_len
-   codepoints — one pass over the batch, two outputs, zero heap. */
-/* la/lb are lengths under the PACK truncation max(lev_max_len,
-   jw_max_len); each metric caps its own prefix from there, so both
-   are prefixes of the ORIGINAL string regardless of which cap is
-   larger (ADVICE r4: the fallback and kernel must agree for any
-   cap ordering, not just the 256/128 defaults). */
-void lev_jw_batch(const uint32_t* A, const uint32_t* B,
-                  const int32_t* la, const int32_t* lb,
-                  int64_t n, int32_t width, double prefix_weight,
-                  int32_t lev_max_len, int32_t jw_max_len,
-                  double* lev_out, double* jw_out)
-{
-    for (int64_t r = 0; r < n; r++) {
-        const uint32_t* s1 = A + r * (int64_t)width;
-        const uint32_t* s2 = B + r * (int64_t)width;
-        int l1 = la[r], l2 = lb[r];
-        int v1 = l1 < lev_max_len ? l1 : lev_max_len;
-        int v2 = l2 < lev_max_len ? l2 : lev_max_len;
-        lev_out[r] = lev_one(s1, v1, s2, v2);
-        int j1 = l1 < jw_max_len ? l1 : jw_max_len;
-        int j2 = l2 < jw_max_len ? l2 : jw_max_len;
-        jw_out[r] = jw_one(s1, j1, s2, j2, prefix_weight);
-    }
-}
-
 #include <stdlib.h>
 
 /* ---- combined pair-scoring kernel (r6): set-intersect sizes +
@@ -382,8 +344,13 @@ static int64_t score_scratch[16384];
 
 /* All offset arrays are length n+1, absolute indices into the value
    buffers (Arrow list layout). String offsets index utf-32 codepoint
-   buffers. Outputs: gram/token intersect sizes (int32) + lev/jw. */
-void score_batch(const int64_t* lgv, const int64_t* lgo,
+   buffers. Outputs: gram/token intersect sizes (int32) + lev/jw.
+   String lengths are under the pack truncation max(lev_max_len,
+   jw_max_len); each metric caps its own prefix from there, so both
+   are prefixes of the ORIGINAL string whichever cap is larger.
+   Returns -1, or the index of the pair whose heap scratch could not
+   be allocated (the batch is then incomplete). */
+int64_t score_batch(const int64_t* lgv, const int64_t* lgo,
                  const int64_t* rgv, const int64_t* rgo,
                  const int64_t* ltv, const int64_t* lto,
                  const int64_t* rtv, const int64_t* rto,
@@ -400,7 +367,7 @@ void score_batch(const int64_t* lgv, const int64_t* lgo,
         int64_t need = (ng1 + ng2 > nt1 + nt2 ? ng1 + ng2 : nt1 + nt2);
         int64_t* scr = score_scratch;
         int heap = need > 16384;
-        if (heap) scr = (int64_t*)malloc((size_t)need * 8);
+        if (heap && !(scr = (int64_t*)malloc((size_t)need * 8))) return r;
         gi_out[r] = (int32_t)isect_size(lgv + lgo[r], ng1, rgv + rgo[r], ng2, scr);
         ti_out[r] = (int32_t)isect_size(ltv + lto[r], nt1, rtv + rto[r], nt2, scr);
         if (heap) free(scr);
@@ -415,6 +382,7 @@ void score_batch(const int64_t* lgv, const int64_t* lgo,
         int j2 = l2 < jw_max_len ? l2 : jw_max_len;
         jw_out[r] = jw_one(s1, j1, s2, j2, prefix_weight);
     }
+    return -1;
 }
 
 /* ---- MinHash/LSH band-hash kernel (r6): shingle -> crc32 ->
@@ -503,8 +471,8 @@ void lsh_band_hashes(const uint32_t* txt, const int64_t* off,
    carries two int64s instead of ~KBs of duplicated per-pair arrays —
    the guide-§8 move (decide with small rows; heavy bytes shipped once
    per worker via the broadcast). Emits sizes too (the JVM cannot see
-   them without the arrays). */
-void score_batch_gather(
+   them without the arrays). Returns like score_batch. */
+int64_t score_batch_gather(
     const int64_t* gvals, const int64_t* goff,
     const int64_t* tvals, const int64_t* toff,
     const uint32_t* pvals, const int64_t* poff,
@@ -521,7 +489,7 @@ void score_batch_gather(
         int64_t need = (ng1 + ng2 > nt1 + nt2 ? ng1 + ng2 : nt1 + nt2);
         int64_t* scr = score_scratch;
         int heap = need > 16384;
-        if (heap) scr = (int64_t*)malloc((size_t)need * 8);
+        if (heap && !(scr = (int64_t*)malloc((size_t)need * 8))) return r;
         gi_out[r] = (int32_t)isect_size(gvals + goff[a], ng1, gvals + goff[b], ng2, scr);
         ti_out[r] = (int32_t)isect_size(tvals + toff[a], nt1, tvals + toff[b], nt2, scr);
         if (heap) free(scr);
@@ -538,170 +506,49 @@ void score_batch_gather(
         int j2 = l2 < jw_max_len ? l2 : jw_max_len;
         jw_out[r] = jw_one(s1, j1, s2, j2, prefix_weight);
     }
+    return -1;
 }
 """
 
-_lib = None
-_tried = False
-_alloc_tuned = False
+_i64 = ctypes.POINTER(ctypes.c_int64)
+_i32 = ctypes.POINTER(ctypes.c_int32)
+_u32 = ctypes.POINTER(ctypes.c_uint32)
+_f64 = ctypes.POINTER(ctypes.c_double)
 
-
-def tune_allocator() -> None:
-    """Keep large batch buffers on the glibc heap instead of mmap.
-
-    Why: every scoring batch builds multi-MB temporaries (the utf-32
-    pack buffers, pandas/Arrow intermediates). glibc serves
-    allocations > M_MMAP_THRESHOLD (128 KB default) via mmap and
-    returns them to the OS on free — so EVERY batch faults fresh
-    zeroed pages, and this host's page-zeroing path is a contended
-    resource that anti-scales with thread count (BENCH.md: 0.60 GiB/s
-    at 8 threads -> 0.20 at 32). Raising the mmap + trim thresholds
-    makes freed buffers stay on the heap and be reused warm
-    (measured: 3x on single-threaded 10 MB alloc churn; the win grows
-    with concurrent workers because the kernel fault path is the
-    shared bottleneck). Called once per python worker from the batch
-    kernels; harmless elsewhere (slightly higher RSS)."""
-    global _alloc_tuned
-    if _alloc_tuned:
-        return
-    _alloc_tuned = True
-    try:
-        libc = ctypes.CDLL("libc.so.6")
-        libc.mallopt(-3, 1 << 29)  # M_MMAP_THRESHOLD = 512 MiB
-        libc.mallopt(-1, 1 << 29)  # M_TRIM_THRESHOLD: keep freed heap
-    except Exception:
-        pass  # non-glibc platform: nothing to tune
-
-
-def _cache_dir() -> str:
-    """Per-user 0700 cache dir (ADVICE r3: a predictable world-writable
-    /tmp path lets another local user pre-plant a malicious .so, since
-    the source — hence the digest — is public). XDG cache if set, else
-    a uid-scoped tmp dir; created 0700 and ownership-verified."""
-    base = os.environ.get("XDG_CACHE_HOME") or os.path.join(
-        tempfile.gettempdir(), f"ef-native-{os.getuid()}"
-    )
-    d = os.path.join(base, "entityframe_spark")
-    os.makedirs(d, mode=0o700, exist_ok=True)
-    st = os.stat(d)
-    if st.st_uid != os.getuid() or (st.st_mode & 0o077):
-        raise RuntimeError(f"native cache dir {d} is not owned-private; refusing")
-    return d
-
-
-def _compile() -> "ctypes.CDLL | None":
-    digest = hashlib.sha256(_C_SOURCE.encode()).hexdigest()[:16]
-    so_path = os.path.join(_cache_dir(), f"ef_jw_{digest}.so")
-    if not os.path.exists(so_path):
-        src = so_path + f".{os.getpid()}.c"
-        tmp_so = so_path + f".{os.getpid()}.tmp"
-        with open(src, "w") as f:
-            f.write(_C_SOURCE)
-        try:
-            subprocess.run(
-                ["cc", "-O3", "-shared", "-fPIC", "-o", tmp_so, src],
-                check=True,
-                capture_output=True,
-                timeout=60,
-            )
-            os.replace(tmp_so, so_path)  # atomic: concurrent workers race safely
-        finally:
-            for p in (src, tmp_so):
-                try:
-                    os.unlink(p)
-                except OSError:
-                    pass
-    st = os.stat(so_path)
-    if st.st_uid != os.getuid():
-        raise RuntimeError(f"{so_path} not owned by current user; refusing to dlopen")
-    lib = ctypes.CDLL(so_path)
-    lib.jw_batch.argtypes = [
-        ctypes.POINTER(ctypes.c_uint32),
-        ctypes.POINTER(ctypes.c_uint32),
-        ctypes.POINTER(ctypes.c_int32),
-        ctypes.POINTER(ctypes.c_int32),
-        ctypes.c_int64,
-        ctypes.c_int32,
-        ctypes.c_double,
-        ctypes.POINTER(ctypes.c_double),
-    ]
-    lib.jw_batch.restype = None
-    lib.lev_jw_batch.argtypes = [
-        ctypes.POINTER(ctypes.c_uint32),
-        ctypes.POINTER(ctypes.c_uint32),
-        ctypes.POINTER(ctypes.c_int32),
-        ctypes.POINTER(ctypes.c_int32),
-        ctypes.c_int64,
-        ctypes.c_int32,
-        ctypes.c_double,
-        ctypes.c_int32,
-        ctypes.c_int32,
-        ctypes.POINTER(ctypes.c_double),
-        ctypes.POINTER(ctypes.c_double),
-    ]
-    lib.lev_jw_batch.restype = None
-    _i64 = ctypes.POINTER(ctypes.c_int64)
-    _u32 = ctypes.POINTER(ctypes.c_uint32)
-    lib.score_batch.argtypes = [
-        _i64, _i64, _i64, _i64, _i64, _i64, _i64, _i64,
-        _u32, _i64, _u32, _i64,
-        ctypes.c_int64, ctypes.c_double, ctypes.c_int32, ctypes.c_int32,
-        ctypes.POINTER(ctypes.c_int32), ctypes.POINTER(ctypes.c_int32),
-        ctypes.POINTER(ctypes.c_double), ctypes.POINTER(ctypes.c_double),
-    ]
-    lib.score_batch.restype = None
-    _i32o = ctypes.POINTER(ctypes.c_int32)
-    lib.score_batch_gather.argtypes = [
-        _i64, _i64, _i64, _i64, _u32, _i64,
-        _i64, _i64, ctypes.c_int64,
-        ctypes.c_double, ctypes.c_int32, ctypes.c_int32,
-        _i32o, _i32o, _i32o, _i32o, _i32o, _i32o,
-        ctypes.POINTER(ctypes.c_double), ctypes.POINTER(ctypes.c_double),
-    ]
-    lib.score_batch_gather.restype = None
-    lib.lsh_band_hashes.argtypes = [
-        _u32, _i64, ctypes.c_int64, ctypes.c_int32,
-        _i64, _i64, ctypes.c_int32, ctypes.c_int32,
-        ctypes.POINTER(ctypes.c_uint32),
-    ]
-    lib.lsh_band_hashes.restype = None
-    return lib
+KERNEL = Kernel(
+    "jw",
+    _C_SOURCE,
+    {
+        "score_batch": (
+            [_i64] * 8 + [_u32, _i64, _u32, _i64]
+            + [ctypes.c_int64, ctypes.c_double, ctypes.c_int32, ctypes.c_int32]
+            + [_i32, _i32, _f64, _f64],
+            ctypes.c_int64,
+        ),
+        "score_batch_gather": (
+            [_i64] * 4 + [_u32, _i64, _i64, _i64, ctypes.c_int64]
+            + [ctypes.c_double, ctypes.c_int32, ctypes.c_int32]
+            + [_i32] * 6 + [_f64, _f64],
+            ctypes.c_int64,
+        ),
+        "lsh_band_hashes": (
+            [_u32, _i64, ctypes.c_int64, ctypes.c_int32]
+            + [_i64, _i64, ctypes.c_int32, ctypes.c_int32, _u32],
+            None,
+        ),
+    },
+)
 
 
 def native_available() -> bool:
-    global _lib, _tried
-    if not _tried:
-        _tried = True
-        try:
-            _lib = _compile()
-        except Exception:
-            _lib = None
-    return _lib is not None
-
-
-def _pack(a_strs, b_strs, max_len: int):
-    """Truncate + pad both sides to a common width. One
-    join+encode+frombuffer per side: pages are touched by the encode,
-    so numpy never writes fresh pages (the slow path on this host)."""
-    n = len(a_strs)
-    a = [(s or "")[:max_len] for s in a_strs]
-    b = [(s or "")[:max_len] for s in b_strs]
-    la = np.fromiter((len(s) for s in a), dtype=np.int32, count=n)
-    lb = np.fromiter((len(s) for s in b), dtype=np.int32, count=n)
-    width = int(max(int(la.max()) if n else 0, int(lb.max()) if n else 0, 1))
-    bufa = "".join(s.ljust(width, "\0") for s in a).encode("utf-32-le")
-    bufb = "".join(s.ljust(width, "\0") for s in b).encode("utf-32-le")
-    A = np.frombuffer(bufa, dtype=np.uint32)
-    B = np.frombuffer(bufb, dtype=np.uint32)
-    return A, B, la, lb, width
+    return KERNEL.available()
 
 
 def _pack_offsets(strs, max_len: int):
     """Truncate and concatenate WITHOUT padding: one join+encode, plus
-    an int64 offsets array (n+1, absolute codepoint indices). Replaces
-    the padded _pack for the scoring kernel — the per-row ljust of
-    _pack was the dominant Python-side cost once the DP went
-    bit-parallel."""
+    an int64 offsets array (n+1, absolute codepoint indices) — no
+    per-row padding, which was the dominant Python-side cost once the
+    DP went bit-parallel."""
     t = [(s or "")[:max_len] for s in strs]
     n = len(t)
     off = np.zeros(n + 1, dtype=np.int64)
@@ -712,127 +559,27 @@ def _pack_offsets(strs, max_len: int):
 
 
 def _u32p(arr):
-    return arr.ctypes.data_as(ctypes.POINTER(ctypes.c_uint32))
+    return arr.ctypes.data_as(_u32)
 
 
 def _i64p(arr):
-    return arr.ctypes.data_as(ctypes.POINTER(ctypes.c_int64))
+    return arr.ctypes.data_as(_i64)
 
 
 def _i32p(arr):
-    return arr.ctypes.data_as(ctypes.POINTER(ctypes.c_int32))
+    return arr.ctypes.data_as(_i32)
 
 
 def _f64p(arr):
-    return arr.ctypes.data_as(ctypes.POINTER(ctypes.c_double))
+    return arr.ctypes.data_as(_f64)
 
 
-def _lev_sim_py(a: str, b: str) -> float:
-    """Scalar normalised Levenshtein similarity — same semantics as the
-    C lev_one (plain codepoint DP). Fallback path only."""
-    l1, l2 = len(a), len(b)
-    if l1 == 0 and l2 == 0:
-        return 1.0
-    if l1 == 0 or l2 == 0:
-        return 0.0
-    if a == b:
-        return 1.0
-    prev = list(range(l2 + 1))
-    for i in range(1, l1 + 1):
-        cur = [i] + [0] * l2
-        ca = a[i - 1]
-        for j in range(1, l2 + 1):
-            cur[j] = min(
-                prev[j - 1] + (b[j - 1] != ca), prev[j] + 1, cur[j - 1] + 1
-            )
-        prev = cur
-    return 1.0 - prev[l2] / max(l1, l2)
-
-
-def lev_jw_batch_fallback(
-    a_strs,
-    b_strs,
-    lev_max_len: int = 256,
-    jw_max_len: int = 128,
-    prefix_weight: float = 0.1,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Pure-Python batch (levenshtein_sim, jaro_winkler) with the same
-    truncation semantics as lev_jw_batch_native. Used inside the
-    scoring pandas UDF when a WORKER has no C compiler (ADVICE r3: the
-    driver-side native_available() check does not see compiler-less
-    executors) — correctness-identical, just slower."""
-    from entityframe_spark.functions.similarity import _jaro_winkler
-
-    tune_allocator()
-    n = len(a_strs)
-    lev = np.zeros(n, dtype=np.float64)
-    jw = np.zeros(n, dtype=np.float64)
-    for i in range(n):
-        a = a_strs[i] or ""
-        b = b_strs[i] or ""
-        lev[i] = _lev_sim_py(a[:lev_max_len], b[:lev_max_len])
-        # each prefix sliced from the ORIGINAL string, exactly like the
-        # native kernel — slicing from the lev-truncated copy diverges
-        # whenever jw_max_len > lev_max_len (ADVICE r4)
-        jw[i] = _jaro_winkler(a[:jw_max_len], b[:jw_max_len], prefix_weight)
-    return lev, jw
-
-
-def jw_batch_native(
-    a_strs, b_strs, prefix_weight: float = 0.1, max_len: int = 128
-) -> np.ndarray:
-    """Batch Jaro-Winkler via the C kernel. Self-initialising (Spark
-    python workers import this module fresh; the .so is compiled or
-    cache-loaded on first call per process)."""
-    tune_allocator()
-    if not native_available():
-        raise RuntimeError(
-            "native JW kernel unavailable on this worker (no C compiler?); "
-            "use the numpy fallback path"
-        )
-    n = len(a_strs)
-    out = np.zeros(n, dtype=np.float64)
-    if n == 0:
-        return out
-    A, B, la, lb, width = _pack(a_strs, b_strs, max_len)
-    _lib.jw_batch(
-        _u32p(A), _u32p(B), _i32p(la), _i32p(lb),
-        n, width, float(prefix_weight), _f64p(out),
+def _scratch_error(r: int, g1: int, g2: int, t1: int, t2: int) -> MemoryError:
+    """The kernel could not allocate pair r's intersect scratch."""
+    return MemoryError(
+        f"scoring kernel could not allocate intersect scratch for pair {r} "
+        f"(gram arrays {g1} + {g2}, token arrays {t1} + {t2} values)"
     )
-    return out
-
-
-def lev_jw_batch_native(
-    a_strs,
-    b_strs,
-    lev_max_len: int = 256,
-    jw_max_len: int = 128,
-    prefix_weight: float = 0.1,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Batch (levenshtein_sim, jaro_winkler) in ONE C pass: lev over
-    the lev_max_len prefix, JW over the jw_max_len prefix.
-    Self-initialising per process, like jw_batch_native."""
-    tune_allocator()
-    if not native_available():
-        raise RuntimeError(
-            "native lev/JW kernel unavailable on this worker (no C "
-            "compiler?); use the JVM levenshtein + numpy JW fallback"
-        )
-    n = len(a_strs)
-    lev = np.zeros(n, dtype=np.float64)
-    jw = np.zeros(n, dtype=np.float64)
-    if n == 0:
-        return lev, jw
-    # pack once at the larger cap; the kernel slices each metric's own
-    # prefix from it, so both prefixes come from the ORIGINAL string
-    # whichever cap is larger (parity with lev_jw_batch_fallback)
-    A, B, la, lb, width = _pack(a_strs, b_strs, max(lev_max_len, jw_max_len))
-    _lib.lev_jw_batch(
-        _u32p(A), _u32p(B), _i32p(la), _i32p(lb),
-        n, width, float(prefix_weight), int(lev_max_len), int(jw_max_len),
-        _f64p(lev), _f64p(jw),
-    )
-    return lev, jw
 
 
 def lsh_band_hashes_native(
@@ -845,13 +592,11 @@ def lsh_band_hashes_native(
     bands: int,
 ) -> np.ndarray:
     """Per-doc LSH band hashes from packed utf-32 docs (see
-    _pack_offsets) — bit-identical to the Python
-    shingle/crc32/minhash/band loop. Returns (n_docs, bands) uint32."""
-    tune_allocator()
-    if not native_available():
-        raise RuntimeError(
-            "native LSH kernel unavailable on this worker (no C compiler?)"
-        )
+    _pack_offsets): zlib CRC-32 over each shingle's UTF-8 bytes,
+    int64 mul-mod MinHash against the Mersenne prime, band CRC over
+    the signature slice's little-endian bytes. Returns (n_docs, bands)
+    uint32."""
+    lib = KERNEL.lib
     if num_hashes > 256:
         raise ValueError("num_hashes must be <= 256 for the native kernel")
     n_docs = len(off) - 1
@@ -860,11 +605,10 @@ def lsh_band_hashes_native(
         return out
     A = np.ascontiguousarray(A, dtype=np.int64)
     B = np.ascontiguousarray(B, dtype=np.int64)
-    _lib.lsh_band_hashes(
+    lib.lsh_band_hashes(
         _u32p(txt), _i64p(np.ascontiguousarray(off, dtype=np.int64)),
         n_docs, int(shingle_k), _i64p(A), _i64p(B),
-        int(num_hashes), int(bands),
-        ctypes.cast(out.ctypes.data, ctypes.POINTER(ctypes.c_uint32)),
+        int(num_hashes), int(bands), _u32p(out),
     )
     return out
 
@@ -890,12 +634,7 @@ def score_batch_native(
     normalised Levenshtein over the lev prefix, Jaro-Winkler over the
     jw prefix. Array inputs are Arrow list layout: int64 value buffers
     plus n+1 absolute offsets. Returns (gi, ti, lev, jw)."""
-    tune_allocator()
-    if not native_available():
-        raise RuntimeError(
-            "native scoring kernel unavailable on this worker (no C "
-            "compiler?); use the pure-Python scoring fallback"
-        )
+    lib = KERNEL.lib
     n = len(a_strs)
     gi = np.zeros(n, dtype=np.int32)
     ti = np.zeros(n, dtype=np.int32)
@@ -915,17 +654,19 @@ def score_batch_native(
     lgv, rgv, ltv, rtv = _nz(lgv), _nz(rgv), _nz(ltv), _nz(rtv)
     A, ao = _pack_offsets(a_strs, max(lev_max_len, jw_max_len))
     B, bo = _pack_offsets(b_strs, max(lev_max_len, jw_max_len))
-    _lib.score_batch(
+    failed = lib.score_batch(
         _i64p(lgv), _i64p(lgo),
         _i64p(rgv), _i64p(rgo),
         _i64p(ltv), _i64p(lto),
         _i64p(rtv), _i64p(rto),
         _u32p(A), _i64p(ao), _u32p(B), _i64p(bo),
         n, float(prefix_weight), int(lev_max_len), int(jw_max_len),
-        ctypes.cast(gi.ctypes.data, ctypes.POINTER(ctypes.c_int32)),
-        ctypes.cast(ti.ctypes.data, ctypes.POINTER(ctypes.c_int32)),
-        _f64p(lev), _f64p(jw),
+        _i32p(gi), _i32p(ti), _f64p(lev), _f64p(jw),
     )
+    if failed >= 0:
+        raise _scratch_error(
+            failed, *(int(o[failed + 1] - o[failed]) for o in (lgo, rgo, lto, rto))
+        )
     return gi, ti, lev, jw
 
 
@@ -942,12 +683,7 @@ def score_batch_gather_native(
     buffers + uint32 prefix codepoints with n_rec+1 offsets — and
     li/ri are per-pair RECORD INDICES into it. Returns
     (gi, gl, gr, ti, tl, tr, lev, jw)."""
-    tune_allocator()
-    if not native_available():
-        raise RuntimeError(
-            "native scoring kernel unavailable on this worker (no C "
-            "compiler?); use the pure-Python scoring fallback"
-        )
+    lib = KERNEL.lib
     gvals, goff, tvals, toff, pvals, poff = feat
     n = len(li)
     li = np.ascontiguousarray(li, dtype=np.int64)
@@ -957,16 +693,18 @@ def score_batch_gather_native(
     jw = np.zeros(n, dtype=np.float64)
     if n == 0:
         return (*out_i, lev, jw)
-    ptrs = [
-        ctypes.cast(a.ctypes.data, ctypes.POINTER(ctypes.c_int32)) for a in out_i
-    ]
-    gi, gl, gr, ti, tl, tr = out_i
-    _lib.score_batch_gather(
+    failed = lib.score_batch_gather(
         _i64p(gvals), _i64p(goff), _i64p(tvals), _i64p(toff),
         _u32p(pvals), _i64p(poff),
         _i64p(li), _i64p(ri), n,
         float(prefix_weight), int(lev_max_len), int(jw_max_len),
-        ptrs[0], ptrs[1], ptrs[2], ptrs[3], ptrs[4], ptrs[5],
+        *[_i32p(a) for a in out_i],
         _f64p(lev), _f64p(jw),
     )
-    return gi, gl, gr, ti, tl, tr, lev, jw
+    if failed >= 0:
+        a, b = li[failed], ri[failed]
+        raise _scratch_error(
+            failed,
+            *(int(o[x + 1] - o[x]) for o, x in ((goff, a), (goff, b), (toff, a), (toff, b))),
+        )
+    return (*out_i, lev, jw)

@@ -4,7 +4,8 @@ The reference deliberately assumes scoring happens upstream
 (docs/design/principles.md:95); the north rule pulls it in scope.
 Preference order per the Spark execution model: built-in JVM
 expressions (levenshtein, token ops on split arrays) > Arrow-batched
-pandas UDFs (Jaro-Winkler) > never per-row Python.
+UDFs over a C kernel (LSH band keys here; pair scoring's Levenshtein
+and Jaro-Winkler in functions/jw_native.py) > never per-row Python.
 
 All scorers take two string columns and return a similarity in [0,1].
 """
@@ -15,7 +16,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
 
 TOKEN_SPLIT = r"\s+"
 
@@ -83,212 +83,6 @@ def bigram_containment(a: Column, b: Column) -> Column:
     return F.when(denom == 0, F.lit(1.0)).otherwise(inter / denom)
 
 
-def _jaro(s1: str, s2: str) -> float:
-    if s1 == s2:
-        return 1.0
-    l1, l2 = len(s1), len(s2)
-    if l1 == 0 or l2 == 0:
-        return 0.0
-    window = max(l1, l2) // 2 - 1
-    if window < 0:
-        window = 0
-    flags1 = [False] * l1
-    flags2 = [False] * l2
-    matches = 0
-    for i, c in enumerate(s1):
-        lo, hi = max(0, i - window), min(l2, i + window + 1)
-        for j in range(lo, hi):
-            if not flags2[j] and s2[j] == c:
-                flags1[i] = flags2[j] = True
-                matches += 1
-                break
-    if matches == 0:
-        return 0.0
-    # transpositions: matched chars out of order
-    k = 0
-    transpositions = 0
-    for i in range(l1):
-        if flags1[i]:
-            while not flags2[k]:
-                k += 1
-            if s1[i] != s2[k]:
-                transpositions += 1
-            k += 1
-    t = transpositions / 2
-    m = matches
-    return (m / l1 + m / l2 + (m - t) / m) / 3.0
-
-
-def _jaro_winkler(s1: str, s2: str, prefix_weight: float = 0.1) -> float:
-    j = _jaro(s1, s2)
-    if j <= 0.7:
-        return j
-    prefix = 0
-    for c1, c2 in zip(s1[:4], s2[:4]):
-        if c1 == c2:
-            prefix += 1
-        else:
-            break
-    return j + prefix * prefix_weight * (1.0 - j)
-
-
-def _pad_codepoints(strs, width: int) -> np.ndarray:
-    """list[str] (each len <= width) -> N x width uint32 codepoint
-    matrix, 0-padded. Built with ONE join+encode+frombuffer — no
-    per-row numpy writes and no 2D fancy indexing (both degenerate to
-    ~1 MB/s on this host's numpy build; measured)."""
-    buf = "".join(s.ljust(width, "\0") for s in strs)
-    return np.frombuffer(buf.encode("utf-32-le"), dtype=np.uint32).reshape(
-        len(strs), width
-    )
-
-
-def jaro_winkler_batch(
-    a_strs, b_strs, prefix_weight: float = 0.1, max_len: int = 128
-) -> np.ndarray:
-    """Numpy-vectorized Jaro-Winkler over a batch of string pairs.
-
-    Bit-for-bit the same semantics as the scalar `_jaro_winkler`
-    (property-tested in tests/test_similarity.py). Vectorization is
-    across the BATCH: the greedy Jaro matching loops over character
-    positions (<= max_len iterations), each iteration a handful of
-    (N x max_len) boolean ops — ~100x the throughput of the per-pair
-    Python loop this replaced (measured 5.5k -> >300k pairs/s/32c)."""
-    n = len(a_strs)
-    if n == 0:
-        return np.empty(0, dtype=np.float64)
-    out = np.zeros(n, dtype=np.float64)
-
-    # filter + sort on the PYTHON side (string equality, len) — the
-    # equal fast path (-> 1.0, includes both-empty), empty-side rows
-    # (-> 0.0), and the length-desc ordering that lets the match loop
-    # shrink its active row set. Cheap (~ms for 10k rows) and avoids
-    # 2D boolean-mask row gathers, which this numpy build runs at ~1MB/s.
-    todo: list[tuple[int, str, str]] = []
-    for i in range(n):
-        a = (a_strs[i] or "")[:max_len]
-        b = (b_strs[i] or "")[:max_len]
-        if a == b:
-            out[i] = 1.0
-        elif a and b:
-            todo.append((i, a, b))
-    if not todo:
-        return out
-    todo.sort(key=lambda t: -len(t[1]))
-    m = len(todo)
-    la = np.fromiter((len(t[1]) for t in todo), dtype=np.int64, count=m)
-    lb = np.fromiter((len(t[2]) for t in todo), dtype=np.int64, count=m)
-    l1max = int(la[0])
-    l2max = int(lb.max())
-    A = _pad_codepoints([t[1] for t in todo], l1max)
-    B = _pad_codepoints([t[2] for t in todo], l2max)
-
-    # uint8 downcast when every codepoint fits (ASCII/Latin-1, the
-    # dominant transcript case): cuts compare traffic 4x. A max() probe
-    # instead of an np.unique remap — unique's sort path is pathologically
-    # slow on this numpy build, and max covers the common case for free.
-    if max(int(A.max()), int(B.max())) < 256:
-        A = A.astype(np.uint8)
-        B = B.astype(np.uint8)
-
-    window = np.maximum(np.maximum(la, lb) // 2 - 1, 0)
-    wmax = int(window.max())
-    # when every row shares the same window and l2 (the dominant case:
-    # fixed-length prefixes), the window reduces to a global column
-    # slice — no per-row mask temporaries at all
-    uniform = bool((window == wmax).all() and (lb == l2max).all())
-    jidx = np.arange(l2max, dtype=np.int64)
-    avail = np.ones((m, l2max), dtype=bool)
-    flags1 = np.zeros((m, l1max), dtype=bool)
-    # active-row count per position i (la sorted desc)
-    n_active = np.searchsorted(-la, -(np.arange(l1max) + 1), side="right")
-    for i in range(l1max):
-        na = int(n_active[i])
-        if na == 0:
-            break
-        cl = max(0, i - wmax)
-        ch = min(l2max, i + wmax + 1)
-        cand = B[:na, cl:ch] == A[:na, i, None]
-        cand &= avail[:na, cl:ch]
-        if not uniform:
-            lo = np.maximum(0, i - window[:na])[:, None]
-            hi = np.minimum(lb[:na], i + window[:na] + 1)[:, None]
-            cand &= jidx[None, cl:ch] >= lo
-            cand &= jidx[None, cl:ch] < hi
-        has = cand.any(axis=1)
-        j = cand.argmax(axis=1) + cl
-        hr = np.nonzero(has)[0]
-        avail[hr, j[hr]] = False
-        flags1[:na, i] = has
-
-    used2 = ~avail
-    matches = flags1.sum(axis=1)
-    jaro = np.zeros(m, dtype=np.float64)
-    pos = matches > 0
-    if pos.any():
-        # gather matched chars in order on both sides, count mismatched
-        # aligned positions -> transpositions. Within-row match ranks are
-        # computed from nonzero's row-major ordering + per-row offsets
-        # (no big cumsum/repeat — both are degenerate on this numpy build)
-        mmax = int(matches.max())
-
-        def _ranks(rows_idx, counts):
-            starts = np.zeros(m + 1, dtype=np.int64)
-            np.cumsum(counts, out=starts[1:])  # m elements: cheap
-            return np.arange(len(rows_idx), dtype=np.int64) - starts[rows_idx]
-
-        s1m = np.zeros((m, mmax), dtype=A.dtype)
-        s2m = np.zeros((m, mmax), dtype=B.dtype)
-        r1, c1 = np.nonzero(flags1)
-        s1m[r1, _ranks(r1, matches)] = A[r1, c1]
-        r2, c2 = np.nonzero(used2)
-        # used2 row sums equal matches by construction
-        s2m[r2, _ranks(r2, matches)] = B[r2, c2]
-        aligned = np.arange(mmax)[None, :] < matches[:, None]
-        trans = ((s1m != s2m) & aligned).sum(axis=1) / 2.0
-        mf = matches.astype(np.float64)
-        jaro[pos] = (
-            mf[pos] / la[pos] + mf[pos] / lb[pos] + (mf[pos] - trans[pos]) / mf[pos]
-        ) / 3.0
-
-    # winkler prefix boost for jaro > 0.7: common prefix up to 4 chars
-    p4 = min(4, l1max, l2max)
-    if p4 > 0:
-        eq4 = (A[:, :p4] == B[:, :p4]) & (
-            np.arange(p4)[None, :] < np.minimum(la, lb)[:, None]
-        )
-        prefix = np.cumprod(eq4, axis=1).sum(axis=1)
-    else:
-        prefix = np.zeros(m, dtype=np.int64)
-    boost = jaro > 0.7
-    jw = jaro.copy()
-    jw[boost] = jaro[boost] + prefix[boost] * prefix_weight * (1.0 - jaro[boost])
-    idx = np.fromiter((t[0] for t in todo), dtype=np.int64, count=m)
-    out[idx] = jw
-    return out
-
-
-@F.pandas_udf(DoubleType())
-def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Arrow-batched Jaro-Winkler similarity (the designated slow path
-    for ops Spark lacks; SURVEY.md §2.11). Prefers the zero-allocation
-    C kernel (functions/jw_native.py, ~150x the numpy batch on this
-    host — fresh numpy allocations pay ~1000x page-zero cost here);
-    falls back to the vectorized numpy batch when no compiler is
-    available. Both are property-tested against the scalar reference."""
-    from entityframe_spark.functions import jw_native
-
-    av = a.fillna("").tolist()
-    bv = b.fillna("").tolist()
-    if jw_native.native_available():
-        return pd.Series(jw_native.jw_batch_native(av, bv))
-    return pd.Series(jaro_winkler_batch(av, bv))
-
-
-def jaro_winkler_sim(a: Column, b: Column, max_len: int = 128) -> Column:
-    return jaro_winkler_udf(F.substring(a, 1, max_len), F.substring(b, 1, max_len))
-
-
 def char_shingles(text: Column, k: int = 5, max_chars: int = 4096) -> Column:
     """k-char shingle array, JVM-side: transform over a sequence of
     start offsets. Lowercased, whitespace-normalised first."""
@@ -310,16 +104,13 @@ def make_lsh_band_keys_udf(
     path ("MinHash/LSH bands over text shingles computed in
     Arrow-batched pandas UDFs").
 
-    Per batch: k-char shingles -> crc32 base hash (deterministic
-    across executors, unlike Python's salted hash()) -> ``num_hashes``
-    linear permutations (a_i*x + b_i mod p, vectorized in numpy) ->
-    per-band minima hashed into string keys. One compact Python stage
-    instead of a 32-expression codegen tree (which measurably blows up
-    JVM compile time).
+    Per batch, in one C pass (jw_native.lsh_band_hashes_native):
+    k-char shingles -> crc32 base hash (deterministic across executors,
+    unlike Python's salted hash()) -> ``num_hashes`` linear
+    permutations (a_i*x + b_i mod p) -> per-band minima hashed into
+    string keys. One compact Arrow stage instead of a 32-expression
+    codegen tree (which measurably blows up JVM compile time).
     """
-    import zlib
-
-    rows_per_band = num_hashes // bands
     rng = np.random.default_rng(seed)
     p = np.int64(2_147_483_647)  # Mersenne prime 2^31-1
     A = rng.integers(1, p, size=num_hashes, dtype=np.int64)
@@ -334,73 +125,18 @@ def make_lsh_band_keys_udf(
         normed = [
             " ".join((t or "")[:max_chars].lower().split()) for t in text
         ]
-        if jw_native.native_available():
-            # r6 (guide §4.2): the whole shingle -> crc32 -> minhash ->
-            # band pipeline in one C pass per batch — bit-identical
-            # values (zlib CRC-32 over utf-8 shingle bytes, int64
-            # mul-mod, band crc over LE signature bytes; parity-tested)
-            # — replacing the ~40-50µs/doc Python loop below.
-            arr, off = jw_native._pack_offsets(normed, max_chars)
-            bh = jw_native.lsh_band_hashes_native(
-                arr, off, shingle_k, A, B, num_hashes, bands
-            )
-            return pd.Series(
-                [
-                    [f"b{b}:{int(bh[d, b])}" for b in range(bands)]
-                    for d in range(len(normed))
-                ]
-            )
-        out = []
-        for t in normed:
-            n = len(t)
-            if n <= shingle_k:
-                shingles = {t}
-            else:
-                shingles = {t[i : i + shingle_k] for i in range(n - shingle_k + 1)}
-            base = np.fromiter(
-                (zlib.crc32(s.encode()) for s in shingles),
-                dtype=np.int64,
-                count=len(shingles),
-            )
-            # (num_hashes x n_shingles) linear perms; min per row
-            sig = ((A[:, None] * base[None, :] + B[:, None]) % p).min(axis=1)
-            keys = [
-                f"b{b}:{zlib.crc32(sig[b * rows_per_band:(b + 1) * rows_per_band].tobytes())}"
-                for b in range(bands)
+        # the whole shingle -> crc32 -> minhash -> band pipeline in
+        # one C pass per batch (guide §4.2)
+        arr, off = jw_native._pack_offsets(normed, max_chars)
+        bh = jw_native.lsh_band_hashes_native(
+            arr, off, shingle_k, A, B, num_hashes, bands
+        )
+        return pd.Series(
+            [
+                [f"b{b}:{int(bh[d, b])}" for b in range(bands)]
+                for d in range(len(normed))
             ]
-            out.append(keys)
-        return pd.Series(out)
+        )
 
     return band_keys
 
-
-def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature as array<long>, entirely JVM-side: the i-th
-    hash is min over shingles of xxhash64(i, shingle). Empty shingle
-    sets get hash of the empty marker."""
-    sig = [
-        F.array_min(
-            F.transform(shingles, lambda s, i=i: F.xxhash64(F.lit(i), s))
-        )
-        for i in range(num_hashes)
-    ]
-    return F.array(*sig)
-
-
-def lsh_band_keys(signature: Column, bands: int, rows_per_band: int) -> Column:
-    """Band the signature: array of ``bands`` string keys
-    'b:<band>:<hash of band slice>'. Records sharing any band key are
-    LSH candidates."""
-    keys = []
-    for b in range(bands):
-        band_slice = F.slice(signature, b * rows_per_band + 1, rows_per_band)
-        keys.append(
-            F.concat_ws(
-                ":",
-                F.lit(f"b{b}"),
-                F.xxhash64(F.concat_ws(",", F.transform(band_slice, lambda x: x.cast("string")))).cast(
-                    "string"
-                ),
-            )
-        )
-    return F.array(*keys)

@@ -13,26 +13,20 @@ semantics (union by MIN node id -> deterministic min-id
 representatives, reference builder.rs:146-218) over int64 index
 arrays at C speed (~100M unions/s/core vs ~1M/s in Python).
 
-Node ids are sparse int64; the Python wrappers map them to dense
-indices with vectorized ``np.searchsorted`` over the sorted unique
-node array (so "min index" == "min node id" inside the kernels) and
-map results back by fancy-indexing. Deployment model matches
-``jw_native``: ~100 lines of C compiled lazily once per host into a
-per-user 0700 cache dir (atomic rename; ownership-verified before
-dlopen); every caller keeps a pure-Python/numpy fallback for
-compiler-less workers.
+Node ids are sparse int64; :func:`dense_ids` maps them to dense
+indices (so "min index" == "min node id" inside the kernels). The
+shared object is loaded by ``functions.native``, like every kernel
+here; tests/ pin each kernel event-for-event against a scalar
+union-find oracle.
 """
 
 from __future__ import annotations
 
 import ctypes
-import hashlib
-import os
-import subprocess
 
 import numpy as np
 
-from entityframe_spark.functions.jw_native import _cache_dir, tune_allocator
+from entityframe_spark.functions.native import Kernel
 
 _C_SOURCE = r"""
 #include <stdint.h>
@@ -152,60 +146,24 @@ void uf_grid_labels(const int64_t* child, const int64_t* par,
 }
 """
 
-_lib = None
-_tried = False
+_I64P = ctypes.POINTER(ctypes.c_int64)
+_U8P = ctypes.POINTER(ctypes.c_uint8)
+_N = ctypes.c_int64
 
-
-def _compile() -> "ctypes.CDLL | None":
-    digest = hashlib.sha256(_C_SOURCE.encode()).hexdigest()[:16]
-    so_path = os.path.join(_cache_dir(), f"ef_uf_{digest}.so")
-    if not os.path.exists(so_path):
-        src = so_path + f".{os.getpid()}.c"
-        tmp_so = so_path + f".{os.getpid()}.tmp"
-        with open(src, "w") as f:
-            f.write(_C_SOURCE)
-        try:
-            subprocess.run(
-                ["cc", "-O3", "-shared", "-fPIC", "-o", tmp_so, src],
-                check=True,
-                capture_output=True,
-                timeout=60,
-            )
-            os.replace(tmp_so, so_path)  # atomic: concurrent workers race safely
-        finally:
-            for p in (src, tmp_so):
-                try:
-                    os.unlink(p)
-                except OSError:
-                    pass
-    st = os.stat(so_path)
-    if st.st_uid != os.getuid():
-        raise RuntimeError(f"{so_path} not owned by current user; refusing to dlopen")
-    lib = ctypes.CDLL(so_path)
-    I64P = ctypes.POINTER(ctypes.c_int64)
-    lib.uf_components.argtypes = [I64P, I64P, ctypes.c_int64, ctypes.c_int64, I64P]
-    lib.uf_components.restype = None
-    lib.uf_single_linkage.argtypes = [I64P] * 3 + [ctypes.c_int64] * 2 + [I64P] * 7
-    lib.uf_single_linkage.restype = ctypes.c_int64
-    lib.uf_grid_labels.argtypes = (
-        [I64P] * 3 + [ctypes.c_int64] * 2 + [I64P, ctypes.c_int64] + [I64P] * 2
-    )
-    lib.uf_grid_labels.restype = None
-    U8P = ctypes.POINTER(ctypes.c_uint8)
-    lib.uf_msf_mask.argtypes = [I64P, I64P, ctypes.c_int64, ctypes.c_int64, I64P, U8P]
-    lib.uf_msf_mask.restype = None
-    return lib
+KERNEL = Kernel(
+    "uf",
+    _C_SOURCE,
+    {
+        "uf_components": ([_I64P, _I64P, _N, _N, _I64P], None),
+        "uf_single_linkage": ([_I64P] * 3 + [_N] * 2 + [_I64P] * 7, ctypes.c_int64),
+        "uf_grid_labels": ([_I64P] * 3 + [_N] * 2 + [_I64P, _N] + [_I64P] * 2, None),
+        "uf_msf_mask": ([_I64P, _I64P, _N, _N, _I64P, _U8P], None),
+    },
+)
 
 
 def native_available() -> bool:
-    global _lib, _tried
-    if not _tried:
-        _tried = True
-        try:
-            _lib = _compile()
-        except Exception:
-            _lib = None
-    return _lib is not None
+    return KERNEL.available()
 
 
 def _i64(a) -> np.ndarray:
@@ -213,15 +171,39 @@ def _i64(a) -> np.ndarray:
 
 
 def _p(a: np.ndarray):
-    return a.ctypes.data_as(ctypes.POINTER(ctypes.c_int64))
+    return a.ctypes.data_as(_I64P)
+
+
+def dense_ids(
+    src: np.ndarray, dst: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, int, np.ndarray | None]:
+    """(src_idx, dst_idx, n_nodes, nodes): kernel indices for sparse
+    int64 node ids, ordered like the ids so min-index unions are
+    min-id unions.
+
+    Interned record ids are 0..n-1 by construction (core/records.py
+    two-phase rank), so when the ids already fit a small non-negative
+    span (<= 2m+16, which keeps kernel arrays within the sparse path's
+    |nodes| <= 2m worst case) they are used DIRECTLY and ``nodes`` is
+    None: this skips np.unique + 2x searchsorted, which dominate large
+    single-task sweeps (measured at 10M edges: 10.3s of a 17s sweep;
+    they are also 3 full-size fresh allocations on a host where page
+    faults are the contended resource, BENCH.md). Otherwise (hash ids,
+    negative or full-range) ``nodes`` is the sorted unique id array and
+    index i stands for ``nodes[i]``."""
+    if len(src) and min(int(src.min()), int(dst.min())) >= 0:
+        span = max(int(src.max()), int(dst.max())) + 1
+        if span <= 2 * len(src) + 16:
+            return src, dst, span, None
+    nodes = np.unique(np.concatenate([src, dst]))
+    return np.searchsorted(nodes, src), np.searchsorted(nodes, dst), len(nodes), nodes
 
 
 def components_native(src_idx: np.ndarray, dst_idx: np.ndarray, n_nodes: int) -> np.ndarray:
     """Root index per node (0..n_nodes-1); union by min index."""
-    tune_allocator()
     src_idx, dst_idx = _i64(src_idx), _i64(dst_idx)
     out = np.empty(n_nodes, dtype=np.int64)
-    _lib.uf_components(_p(src_idx), _p(dst_idx), len(src_idx), n_nodes, _p(out))
+    KERNEL.lib.uf_components(_p(src_idx), _p(dst_idx), len(src_idx), n_nodes, _p(out))
     return out
 
 
@@ -230,13 +212,12 @@ def single_linkage_native(
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """(t, child_idx, parent_idx, left_size, right_size) arrays of the
     merge events; inputs must already be sorted by wfp DESC (stable)."""
-    tune_allocator()
     src_idx, dst_idx, wfp = _i64(src_idx), _i64(dst_idx), _i64(wfp)
     cap = max(n_nodes - 1, 1) if n_nodes else 1
     parent = np.empty(n_nodes, dtype=np.int64)
     size = np.empty(n_nodes, dtype=np.int64)
     out = [np.empty(cap, dtype=np.int64) for _ in range(5)]
-    m = _lib.uf_single_linkage(
+    m = KERNEL.lib.uf_single_linkage(
         _p(src_idx), _p(dst_idx), _p(wfp), len(src_idx), n_nodes,
         _p(parent), _p(size), *[_p(o) for o in out],
     )
@@ -247,13 +228,12 @@ def msf_mask_native(src_idx: np.ndarray, dst_idx: np.ndarray, n_nodes: int) -> n
     """Boolean keep-mask of the canonical Kruskal forest; inputs must
     already be in the canonical (-w, src, dst) order (weights are not
     needed — the order carries them)."""
-    tune_allocator()
     src_idx, dst_idx = _i64(src_idx), _i64(dst_idx)
     parent = np.empty(n_nodes, dtype=np.int64)
     mask = np.empty(len(src_idx), dtype=np.uint8)
-    _lib.uf_msf_mask(
+    KERNEL.lib.uf_msf_mask(
         _p(src_idx), _p(dst_idx), len(src_idx), n_nodes, _p(parent),
-        mask.ctypes.data_as(ctypes.POINTER(ctypes.c_uint8)),
+        mask.ctypes.data_as(_U8P),
     )
     return mask.view(np.bool_)
 
@@ -267,12 +247,11 @@ def grid_labels_native(
 ) -> np.ndarray:
     """Label matrix (n_grid, n_nodes): root index of each node at each
     grid threshold. tf and grid_desc must be sorted DESC."""
-    tune_allocator()
     child_idx, parent_idx, tf = _i64(child_idx), _i64(parent_idx), _i64(tf)
     grid_desc = _i64(grid_desc)
     parent = np.empty(n_nodes, dtype=np.int64)
     out = np.empty(len(grid_desc) * n_nodes, dtype=np.int64)
-    _lib.uf_grid_labels(
+    KERNEL.lib.uf_grid_labels(
         _p(child_idx), _p(parent_idx), _p(tf), len(child_idx), n_nodes,
         _p(grid_desc), len(grid_desc), _p(parent), _p(out),
     )

@@ -172,7 +172,7 @@ def load_frame(spark: SparkSession, path: str) -> EntityFrame:
     # a zero-collection frame's partitioned tables have no part files
     # (partitionBy of an empty DataFrame writes only _SUCCESS), so their
     # reads fall back to empty-but-typed frames (ADVICE r4)
-    fallbacks = {
+    empty_schemas = {
         "merge_events": "merge_id string, collection_id int, threshold double",
         "merge_groups": (
             "group_id string, merge_id string, group_no int, collection_id int"
@@ -186,9 +186,9 @@ def load_frame(spark: SparkSession, path: str) -> EntityFrame:
         try:
             tables[tbl] = spark.read.parquet(f"{path}/{tbl}")
         except Exception:
-            if tbl not in fallbacks:
+            if tbl not in empty_schemas:
                 raise
-            tables[tbl] = spark.createDataFrame([], fallbacks[tbl])
+            tables[tbl] = spark.createDataFrame([], empty_schemas[tbl])
     # base_ids table: frames saved before r4 lack it (old whole-space
     # default applies)
     try:

@@ -65,7 +65,7 @@ def _ckpt_unpersist(df: DataFrame) -> None:
         pass  # API drift: degrade to keep-until-context-GC
 
 from entityframe_spark.functions import uf_native
-from entityframe_spark.functions.jw_native import tune_allocator
+from entityframe_spark.functions.native import tune_allocator
 
 # fire in every pyspark worker at closure-deserialize time, BEFORE the
 # first Arrow batch is materialised: the multi-hundred-MB single-task
@@ -77,39 +77,24 @@ tune_allocator()
 def local_component_labels(
     src: np.ndarray, dst: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
-    """(nodes, component label per node) for one in-task edge batch.
-
-    C kernel when available (the per-edge Python loop was the
-    single-task throughput bound at the 10M-edge component cap —
-    VERDICT r3), numpy/Python union-find fallback otherwise. Both
-    paths: union by min node id -> deterministic min-id labels."""
+    """(nodes, component label per node) for one in-task edge batch, by
+    the C union-find kernel (a per-edge Python loop was the single-task
+    throughput bound at the 10M-edge component cap — VERDICT r3).
+    Union by min node id -> deterministic min-id labels."""
     src = np.ascontiguousarray(src, dtype=np.int64)
     dst = np.ascontiguousarray(dst, dtype=np.int64)
     if len(src) == 0:
         return np.empty(0, np.int64), np.empty(0, np.int64)
-    if uf_native.native_available():
-        # dense-id fast path (same bound as hierarchy._sweep_arrays):
-        # interned ids are 0..n-1, so when the id span fits ~2m the
-        # kernel indexes them directly and a boolean presence mask
-        # replaces the O(m log m) unique + 2x searchsorted that
-        # dominate large batches on this host (fresh-page confounder,
-        # BENCH.md). min-index unions == min-id unions holds trivially
-        # under the identity mapping.
-        lo = min(int(src.min()), int(dst.min()))
-        span = max(int(src.max()), int(dst.max())) + 1
-        if lo >= 0 and span <= 2 * len(src) + 16:
-            roots = uf_native.components_native(src, dst, span)
-            present = np.zeros(span, dtype=bool)
-            present[src] = True
-            present[dst] = True
-            nodes = np.flatnonzero(present)
-            return nodes, roots[nodes]
-        nodes = np.unique(np.concatenate([src, dst]))
-        si = np.searchsorted(nodes, src)
-        di = np.searchsorted(nodes, dst)
-        return nodes, nodes[uf_native.components_native(si, di, len(nodes))]
-    nodes = np.unique(np.concatenate([src, dst]))
-    return nodes, union_find_numpy(src, dst, nodes)
+    si, di, n, nodes = uf_native.dense_ids(src, dst)
+    roots = uf_native.components_native(si, di, n)
+    if nodes is not None:
+        return nodes, nodes[roots]
+    # identity mapping: a boolean presence mask lists the ids in use
+    present = np.zeros(n, dtype=bool)
+    present[src] = True
+    present[dst] = True
+    nodes = np.flatnonzero(present)
+    return nodes, roots[nodes]
 
 
 def _canonical(e: DataFrame) -> DataFrame:
@@ -434,42 +419,6 @@ def connected_components(
     members = e.select(F.col("v").alias("node"), F.col("u").alias("component"))
     roots = e.select(F.col("u").alias("node"), F.col("u").alias("component")).distinct()
     return members.unionAll(roots).dropDuplicates(["node"])
-
-
-# ---------------------------------------------------------------------------
-# exact in-memory union-find (per-block / per-component local path)
-# ---------------------------------------------------------------------------
-
-
-def union_find_numpy(src: np.ndarray, dst: np.ndarray, nodes: np.ndarray) -> np.ndarray:
-    """Plain union-find with path compression; root = min id.
-
-    Semantics match the reference's UnionFind sweep
-    (builder.rs:146-218): every union picks the smaller representative
-    so labels are deterministic min-ids.
-    Returns component label per entry of ``nodes``.
-    """
-    idx = {int(n): i for i, n in enumerate(nodes)}
-    parent = np.arange(len(nodes), dtype=np.int64)
-
-    def find(x: int) -> int:
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    for s, d in zip(src, dst):
-        rs, rd = find(idx[int(s)]), find(idx[int(d)])
-        if rs == rd:
-            continue
-        # union by min node id to keep deterministic representatives
-        if nodes[rs] <= nodes[rd]:
-            parent[rd] = rs
-        else:
-            parent[rs] = rd
-    return np.array([nodes[find(i)] for i in range(len(nodes))], dtype=np.int64)
 
 
 def connected_components_blocked(

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 from entityframe_spark.functions import uf_native
 from entityframe_spark.operators.components import _YIELD_CHUNK, connected_components
-from entityframe_spark.functions.jw_native import tune_allocator
+from entityframe_spark.functions.native import tune_allocator
 
 # fire in every pyspark worker at closure-deserialize time, BEFORE the
 # first Arrow batch is materialised: the multi-hundred-MB single-task
@@ -85,70 +85,22 @@ def _sweep_arrays_np(
     (measured 10M-node/50M-edge giant component: lexsort 119s +
     take 67s of a ~260s in-process sweep).
 
-    C kernel when available (the per-edge Python loop bounded
+    Runs the C union-find kernel (a per-edge Python loop bounded
     single-task throughput at ~1M edges/s; the kernel runs ~100M/s —
-    VERDICT r3 Wrong #3), Python union-find fallback otherwise. Both
-    mirror builder.rs:146-218: all edges at an equal threshold process
-    in one batch (n-way merges fall out naturally); duplicate/cycle
-    edges are skipped; the representative stays the min record id.
+    VERDICT r3 Wrong #3). It mirrors builder.rs:146-218: all edges at
+    an equal threshold process in one batch (n-way merges fall out
+    naturally); duplicate/cycle edges are skipped; the representative
+    stays the min record id.
     """
     if not presorted:
         # lexsort: last key is primary -> (-w_fp, src, dst) total order
         order = np.lexsort((dst, src, -wfp))
         src, dst, wfp = src[order], dst[order], wfp[order]
-
-    if uf_native.native_available() and len(src):
-        # Dense-id fast path: interned record ids are 0..n-1 by
-        # construction (core/records.py two-phase rank), so when ids
-        # already fit a small non-negative span the kernel can index
-        # them DIRECTLY — skipping np.unique + 2x searchsorted, which
-        # dominate large single-task sweeps (measured at 10M edges:
-        # 10.3s of a 17s sweep; they are also 3 full-size fresh
-        # allocations on a host where page faults are the contended
-        # resource, BENCH.md). The 2m+16 span bound keeps kernel array
-        # memory within the sparse path's existing |nodes|<=2m worst
-        # case. Hash-ids (full-range/negative) take the sparse path.
-        lo = min(int(src.min()), int(dst.min()))
-        span = max(int(src.max()), int(dst.max())) + 1
-        if lo >= 0 and span <= 2 * len(src) + 16:
-            t, c, p, ls, rs = uf_native.single_linkage_native(src, dst, wfp, span)
-            return t, c, p, ls, rs
-
-    nodes = np.unique(np.concatenate([src, dst]))
-    if uf_native.native_available():
-        si = np.searchsorted(nodes, src)
-        di = np.searchsorted(nodes, dst)
-        t, c, p, ls, rs = uf_native.single_linkage_native(si, di, wfp, len(nodes))
-        return t, nodes[c], nodes[p], ls, rs
-
-    idx = {int(n): i for i, n in enumerate(nodes)}
-    parent = np.arange(len(nodes), dtype=np.int64)
-    size = np.ones(len(nodes), dtype=np.int64)
-
-    def find(x: int) -> int:
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    rows: list[tuple[int, int, int, int, int]] = []
-    for s, d, t in zip(src, dst, wfp):
-        ri, rj = find(idx[int(s)]), find(idx[int(d)])
-        if ri == rj:
-            continue
-        if nodes[ri] <= nodes[rj]:
-            keep, drop = ri, rj
-        else:
-            keep, drop = rj, ri
-        rows.append(
-            (int(t), int(nodes[drop]), int(nodes[keep]), int(size[keep]), int(size[drop]))
-        )
-        size[keep] += size[drop]
-        parent[drop] = keep
-    arr = np.array(rows, dtype=np.int64).reshape(-1, 5)
-    return arr[:, 0], arr[:, 1], arr[:, 2], arr[:, 3], arr[:, 4]
+    si, di, n, nodes = uf_native.dense_ids(src, dst)
+    t, c, p, ls, rs = uf_native.single_linkage_native(si, di, wfp, n)
+    if nodes is not None:
+        c, p = nodes[c], nodes[p]
+    return t, c, p, ls, rs
 
 
 def _local_single_linkage(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -218,44 +170,12 @@ def _sweep_run(batches, sized: bool):
 
 def _msf_keep_mask(src: np.ndarray, dst: np.ndarray) -> np.ndarray:
     """Keep-mask of the canonical max-spanning forest over edges
-    ALREADY in (-w_fp, src, dst) order: same dense-id fast path /
-    sparse searchsorted mapping as :func:`_sweep_arrays_np`, same
-    pure-Python union-find fallback for compiler-less workers."""
-    n = len(src)
-    if n == 0:
+    ALREADY in (-w_fp, src, dst) order, with the same id mapping as
+    :func:`_sweep_arrays_np`."""
+    if len(src) == 0:
         return np.zeros(0, dtype=bool)
-    if uf_native.native_available():
-        lo = min(int(src.min()), int(dst.min()))
-        span = max(int(src.max()), int(dst.max())) + 1
-        if lo >= 0 and span <= 2 * n + 16:
-            return uf_native.msf_mask_native(src, dst, span)
-        nodes = np.unique(np.concatenate([src, dst]))
-        return uf_native.msf_mask_native(
-            np.searchsorted(nodes, src), np.searchsorted(nodes, dst), len(nodes)
-        )
-    nodes = np.unique(np.concatenate([src, dst]))
-    idx = {int(v): i for i, v in enumerate(nodes)}
-    parent = np.arange(len(nodes), dtype=np.int64)
-
-    def find(x: int) -> int:
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    mask = np.zeros(n, dtype=bool)
-    for e in range(n):
-        ri, rj = find(idx[int(src[e])]), find(idx[int(dst[e])])
-        if ri == rj:
-            continue
-        if ri <= rj:
-            parent[rj] = ri
-        else:
-            parent[ri] = rj
-        mask[e] = True
-    return mask
+    si, di, n, _ = uf_native.dense_ids(src, dst)
+    return uf_native.msf_mask_native(si, di, n)
 
 
 def _msf_filter_pass(e: DataFrame, n_parts: int | None) -> DataFrame:
@@ -733,55 +653,19 @@ def memberships_for_grid(
                 )
 
         n = len(nodes)
-        if uf_native.native_available():
-            # C kernel: O(edges + grid*nodes) with no per-edge Python;
-            # handles multiple components in one batch natively
-            labels_idx = uf_native.grid_labels_native(
-                ch_idx, pa_idx, tf, n, grid_arr
-            )
-            for g in range(len(grid_arr)):
-                row = labels_idx[g]
-                for i in range(0, n, _YIELD_CHUNK):
-                    yield pd.DataFrame(
-                        {
-                            "threshold_fp": np.full(
-                                min(_YIELD_CHUNK, n - i), grid_arr[g], dtype=np.int64
-                            ),
-                            "record_id": nodes[i : i + _YIELD_CHUNK],
-                            "cluster_id": nodes[row[i : i + _YIELD_CHUNK]],
-                        }
-                    )
-            return
-
-        parent = np.arange(n, dtype=np.int64)
-
-        def find(x: int) -> int:
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:
-                parent[x], x = root, parent[x]
-            return root
-
-        pos = 0
-        for t in grid_list:  # descending: union-find only ever coarsens
-            while pos < len(tf) and tf[pos] >= t:
-                ri, rj = find(int(ch_idx[pos])), find(int(pa_idx[pos]))
-                if ri != rj:
-                    if ri <= rj:
-                        parent[rj] = ri
-                    else:
-                        parent[ri] = rj
-                pos += 1
-            labels = np.array([nodes[find(i)] for i in range(n)], dtype=np.int64)
+        # C kernel: O(edges + grid*nodes) with no per-edge Python;
+        # handles multiple components in one batch natively
+        labels_idx = uf_native.grid_labels_native(ch_idx, pa_idx, tf, n, grid_arr)
+        for g in range(len(grid_arr)):
+            row = labels_idx[g]
             for i in range(0, n, _YIELD_CHUNK):
                 yield pd.DataFrame(
                     {
                         "threshold_fp": np.full(
-                            min(_YIELD_CHUNK, n - i), t, dtype=np.int64
+                            min(_YIELD_CHUNK, n - i), grid_arr[g], dtype=np.int64
                         ),
                         "record_id": nodes[i : i + _YIELD_CHUNK],
-                        "cluster_id": labels[i : i + _YIELD_CHUNK],
+                        "cluster_id": nodes[row[i : i + _YIELD_CHUNK]],
                     }
                 )
 

@@ -16,7 +16,7 @@ record space are collected once (gated: <= ``max_collect_rows`` rows
 total, a few hundred MB ceiling), broadcast, and the grid is
 partitioned across executors by t_a. Each task replays the two merge
 sequences with the same union-find grid-label kernel the membership
-reconstruction uses (functions/uf_native.py, pure-numpy fallback) and
+reconstruction uses (functions/uf_native.py) and
 reduces each (t_a, t_b) cell set with one vectorised np.unique — total
 work O(|grid_a| x |grid_b| x n log n) arithmetic instead of a 150M-row
 shuffle, ~50x less wall at bench scale. Inputs above the gates return
@@ -75,39 +75,6 @@ def _sorted_edges(me: tuple[np.ndarray, np.ndarray, np.ndarray], nodes):
         _map_to_idx(nodes, pa[order], "parent"),
         tf[order],
     )
-
-
-def _grid_label_matrix(
-    ch_idx: np.ndarray, pa_idx: np.ndarray, tf: np.ndarray, n: int,
-    grid_desc: np.ndarray,
-) -> np.ndarray:
-    """(|grid|, n) root-index matrix; C kernel when compiled, the same
-    path-halving union-find in Python otherwise (cf. hierarchy.py)."""
-    if uf_native.native_available():
-        return uf_native.grid_labels_native(ch_idx, pa_idx, tf, n, grid_desc)
-    parent = np.arange(n, dtype=np.int64)
-
-    def find(x: int) -> int:
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    out = np.empty((len(grid_desc), n), dtype=np.int64)
-    pos = 0
-    for g, t in enumerate(grid_desc):
-        while pos < len(tf) and tf[pos] >= t:
-            ri, rj = find(int(ch_idx[pos])), find(int(pa_idx[pos]))
-            if ri != rj:
-                if ri <= rj:
-                    parent[rj] = ri
-                else:
-                    parent[ri] = rj
-            pos += 1
-        out[g] = [find(i) for i in range(n)]
-    return out
 
 
 def _marginal_stats(labels: np.ndarray, n: int) -> tuple[np.ndarray, float, float]:
@@ -224,8 +191,8 @@ def pair_sweep_stats(
         # measured ~30 ms at bench scale) to rebuild per task, and
         # max_side_cells bounds its memory
         sub_a = ga_[np.array(sorted(my_ga), dtype=np.int64)]
-        la_mat = _grid_label_matrix(*ea_, n_, sub_a)
-        lb_mat = _grid_label_matrix(*eb_, n_, gb_)
+        la_mat = uf_native.grid_labels_native(*ea_, n_, sub_a)
+        lb_mat = uf_native.grid_labels_native(*eb_, n_, gb_)
         b_marg = [_marginal_stats(lb_mat[j], n_) for j in range(len(gb_))]
         Nd = float(n_)
         rows = {k: [] for k in (

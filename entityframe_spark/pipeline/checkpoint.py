@@ -43,7 +43,7 @@ def _iceberg_available(spark: SparkSession, catalog: str | None) -> bool:
     the Iceberg branch has never executed in this container (no
     catalog jars are installed, so this probe always returns False
     here); it is seam code per SURVEY §7, exercised only via the
-    parquet fallback. A jar fetch was attempted and failed at DNS —
+    parquet branch. A jar fetch was attempted and failed at DNS —
     evidence + provisioning steps in tools/ICEBERG_ATTEMPT.md.
     Validate against a real catalog before relying on the
     writeTo/createOrReplace path."""

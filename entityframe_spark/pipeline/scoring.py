@@ -13,9 +13,11 @@ cost on ~500k pairs:
    prefix. Raw per-pair payload was ~26KB/row (13GB for 515k pairs) —
    IO-bound, thread-scaling-hostile; hashed payload is ~5-8x smaller
    and long-array intersects beat string intersects.
-3. Jaro-Winkler runs on a 128-char prefix in an Arrow-batched pandas
-   UDF; Levenshtein (JVM built-in) on the 256-char prefix — the
-   O(len^2) DP at 512 chars was 4x the whole rest (measured).
+3. Every per-pair feature comes out of ONE Arrow stage over the C
+   scoring kernel (functions/jw_native.py): set intersect sizes,
+   Levenshtein on the 256-char prefix and Jaro-Winkler on the
+   128-char prefix — the O(len^2) DP at 512 chars was 4x the whole
+   rest (measured).
 
 Features (all in [0,1]): bigram containment/jaccard (order-aware;
 containment is what separates truncated variants), token jaccard,
@@ -27,11 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from entityframe_spark.functions.similarity import (
-    TOKEN_SPLIT,
-    jaro_winkler_sim,
-    levenshtein_sim,
-)
+from entityframe_spark.functions.similarity import TOKEN_SPLIT
 
 DEFAULT_WEIGHTS = {
     "bigram_containment": 0.35,
@@ -84,58 +82,48 @@ def attach_pair_texts(
     broadcast_threshold: int = 500_000,
     features_count: int | None = None,
 ) -> DataFrame:
-    """Two equi-joins pulling both sides' prefix + hashed arrays onto
-    each pair. ``features`` must carry FEATURE_COLS (from
-    prepare_record_features); derived here if missing (small-input
-    convenience path).
+    """Prepare candidate pairs for :func:`score_pairs`. ``features``
+    must carry FEATURE_COLS (from prepare_record_features); derived
+    here if missing (small-input convenience path).
 
-    Join strategy (the scale decision that dominates scoring wall):
-    the feature rows are ~2-4 KB each (two hashed-set arrays + a
-    256-char prefix), so a shuffle join moves pairs x 2 x that — 8 GB
-    for 2.4M pairs, an IO cost that does NOT scale with cores
-    (measured: the single biggest drag on N->4N scaling efficiency).
-    When the feature table is dimension-sized (< broadcast_threshold
-    rows) it is BROADCAST instead: zero pair shuffle, the join runs
-    map-side over the pairs' existing partitions. Beyond the
-    threshold (the 100 TB path) callers should bucket both sides on
-    record_id and let sort-merge join co-locate; pass
-    broadcast_threshold=0 to force the shuffle join.
+    Output shape depends on the size of the feature table:
+
+    - below ``broadcast_threshold`` rows (the gather route, guide §8):
+      the pair columns UNCHANGED — no text or array columns — plus a
+      python-side ``_ef_pair_features`` handle on the returned
+      DataFrame object. The feature table is collected ONCE and
+      shipped to workers as a Spark broadcast; score_pairs' gather
+      kernel looks both sides up by record index. The pair stream
+      then carries two int64s + block_key instead of ~2.7 KB of
+      duplicated arrays per pair (measured: 1.4 GB of Arrow traffic
+      for 515k pairs over 1.5k records). The handle does not survive
+      further transformations, so pass the result to score_pairs
+      unmodified.
+    - otherwise (the 100 TB path; ``broadcast_threshold=0`` forces
+      it): two shuffle equi-joins put both sides' prefix
+      (left_text/right_text) and hashed arrays (lgrams/rgrams,
+      ltoks/rtoks) on each pair row. Feature rows are ~2-4 KB, so
+      this shuffles pairs x 2 x that (8 GB for 2.4M pairs, an IO cost
+      that does not scale with cores); callers at that scale should
+      bucket both sides on record_id and let sort-merge join
+      co-locate.
 
     ``features_count``: caller-supplied row count of ``features``.
     When the caller already knows it (it usually does — the collapse
     stage counts its output), the capped limit().count() probe job is
-    skipped entirely; the probe is only the no-hint fallback (VERDICT
+    skipped entirely; the probe only runs without the hint (VERDICT
     r3: one extra Spark job in the hot path)."""
-    from entityframe_spark.functions import jw_native
-
     if "toks_h" not in features.columns:
         features = prepare_record_features(features).localCheckpoint(eager=False)
     sel = features.select(*FEATURE_COLS)
-    if broadcast_threshold:
-        small = (
-            features_count < broadcast_threshold
-            if features_count is not None
-            else sel.limit(broadcast_threshold).count() < broadcast_threshold
-        )
-        if small and jw_native.native_available():
-            # r6 (guide §8): when the feature table is dimension-sized,
-            # do not attach the heavy per-record arrays to every pair
-            # row at all — collect the table ONCE, ship it to workers
-            # as a Spark broadcast, and let score_pairs' gather kernel
-            # look both sides up by record index. The pair stream then
-            # carries two int64s + block_key instead of ~2.7 KB of
-            # duplicated arrays per pair (measured: 1.4 GB of Arrow
-            # traffic for 515k pairs over 1.5k records). The handle
-            # rides on the returned DataFrame object; score_pairs
-            # consumes it, and any other consumer still sees a valid
-            # (narrow) pair frame. Falls through to the broadcast JOIN
-            # when no C kernel is available (the JVM fallback route
-            # needs the arrays as columns).
-            out = pairs.select("*")  # fresh DF object: never mutate the caller's
-            out._ef_pair_features = _collect_features_broadcast(sel)
-            return out
-        if small:
-            sel = F.broadcast(sel)
+    if broadcast_threshold and (
+        features_count < broadcast_threshold
+        if features_count is not None
+        else sel.limit(broadcast_threshold).count() < broadcast_threshold
+    ):
+        out = pairs.select("*")  # fresh DF object: never mutate the caller's
+        out._ef_pair_features = _collect_features_broadcast(sel)
+        return out
     left = sel.select(
         F.col("record_id").alias("left_id"),
         F.col("prefix").alias("left_text"),
@@ -224,15 +212,15 @@ def _score_pairs_gather(
         import numpy as np
         import pyarrow as pa
 
-        from entityframe_spark.functions import jw_native
+        from entityframe_spark.functions import jw_native, native
 
-        jw_native.tune_allocator()
+        native.tune_allocator()
         ids, gvals, goff, tvals, toff, pvals, poff = bc.value
         feat = (gvals, goff, tvals, toff, pvals, poff)
         for b in batches:
             n = b.num_rows
-            if n == 0:
-                continue
+            if n == 0 or len(ids) == 0:
+                continue  # empty feature table: no pair can match
             idx = {nm: i for i, nm in enumerate(b.schema.names)}
             lid = b.column(idx["left_id"]).to_numpy(zero_copy_only=False)
             rid = b.column(idx["right_id"]).to_numpy(zero_copy_only=False)
@@ -248,51 +236,9 @@ def _score_pairs_gather(
                 n = b.num_rows
                 if n == 0:
                     continue
-            if jw_native.native_available():
-                gi, gl, gr, ti, tl, tr, lev, jw = (
-                    jw_native.score_batch_gather_native(
-                        feat, li, ri, lev_cap, jw_cap
-                    )
-                )
-            else:
-                # heterogeneous-cluster fallback: same semantics in
-                # pure Python/numpy
-                gl = (goff[li + 1] - goff[li]).astype(np.int32)
-                gr = (goff[ri + 1] - goff[ri]).astype(np.int32)
-                tl = (toff[li + 1] - toff[li]).astype(np.int32)
-                tr = (toff[ri + 1] - toff[ri]).astype(np.int32)
-                gi = np.fromiter(
-                    (
-                        len(
-                            set(gvals[goff[a]:goff[a + 1]])
-                            & set(gvals[goff[c]:goff[c + 1]])
-                        )
-                        for a, c in zip(li, ri)
-                    ),
-                    np.int32,
-                    count=n,
-                )
-                ti = np.fromiter(
-                    (
-                        len(
-                            set(tvals[toff[a]:toff[a + 1]])
-                            & set(tvals[toff[c]:toff[c + 1]])
-                        )
-                        for a, c in zip(li, ri)
-                    ),
-                    np.int32,
-                    count=n,
-                )
-
-                def _s(i):
-                    cp = pvals[poff[i]:poff[i + 1]]
-                    return cp.tobytes().decode("utf-32-le")
-
-                lp = [_s(a) for a in li]
-                rp = [_s(c) for c in ri]
-                lev, jw = jw_native.lev_jw_batch_fallback(
-                    lp, rp, lev_cap, jw_cap
-                )
+            gi, gl, gr, ti, tl, tr, lev, jw = jw_native.score_batch_gather_native(
+                feat, li, ri, lev_cap, jw_cap
+            )
             yield pa.RecordBatch.from_arrays(
                 [
                     b.column(idx["left_id"]),
@@ -319,8 +265,7 @@ def _score_pairs_gather(
 
 def _feature_projection():
     """Shared final projection: identical expressions (and doubles) on
-    both Arrow routes and structurally the same ones the JVM route
-    uses."""
+    both Arrow routes."""
     gi, gl, gr = F.col("_gi"), F.col("_gl"), F.col("_gr")
     ti, tl, tr = F.col("_ti"), F.col("_tl"), F.col("_tr")
     return [
@@ -342,18 +287,6 @@ def _feature_projection():
     ]
 
 
-def _jaccard(a, b):
-    inter = F.size(F.array_intersect(a, b))
-    union = F.size(F.array_union(a, b))
-    return F.when(union == 0, F.lit(1.0)).otherwise(inter / union)
-
-
-def _containment(a, b):
-    inter = F.size(F.array_intersect(a, b))
-    denom = F.least(F.size(a), F.size(b))
-    return F.when(denom == 0, F.lit(1.0)).otherwise(inter / denom)
-
-
 def _score_pairs_arrow(
     src_df: DataFrame, lev_max_len: int, jw_max_len: int
 ) -> DataFrame:
@@ -369,16 +302,15 @@ def _score_pairs_arrow(
     array columns as pass-through. Moving the intersects into the same
     native kernel as lev/JW (linear merge over pre-sorted hash arrays)
     removes both the boxed per-pair hashing AND the barrier Exchange:
-    the plan is now scan -> broadcast joins -> MapInArrow -> project,
+    the plan is now scan -> joins -> MapInArrow -> project,
     one stage, no shuffle. The arrays are consumed INSIDE the Arrow
     stage (not passed through), so the output rows stay narrow.
 
-    Feature values are bit-identical to the JVM path: intersect size
-    has distinct-value semantics exactly like size(array_intersect),
-    lev/JW are the same kernels, and the final feature expressions
-    (divisions + round) stay in the JVM so both routes share them.
-    Workers without a C compiler fall back to a pure-Python batch with
-    the same semantics (heterogeneous-cluster contract, ADVICE r3)."""
+    Feature values are bit-identical to the JVM expressions
+    size(array_intersect) and the built-in levenshtein (pinned by
+    tests/test_similarity.py): intersect size has distinct-value
+    semantics, and the final feature expressions (divisions + round)
+    stay in the JVM, shared with the gather route."""
     pack_len = max(int(lev_max_len), int(jw_max_len))
     lev_cap, jw_cap = int(lev_max_len), int(jw_max_len)
     src = src_df.select(
@@ -402,9 +334,9 @@ def _score_pairs_arrow(
         import numpy as np
         import pyarrow as pa
 
-        from entityframe_spark.functions import jw_native
+        from entityframe_spark.functions import jw_native, native
 
-        jw_native.tune_allocator()
+        native.tune_allocator()
 
         def list_np(arr):
             """Arrow ListArray -> (int64 values, int64 offsets[n+1],
@@ -438,39 +370,10 @@ def _score_pairs_arrow(
             rtv, rto = list_np(b.column(idx["rtoks"]))
             lp = b.column(idx["_lp"]).to_pylist()
             rp = b.column(idx["_rp"]).to_pylist()
-            if jw_native.native_available():
-                gi, ti, lev, jw = jw_native.score_batch_native(
-                    lgv, lgo, rgv, rgo, ltv, lto, rtv, rto,
-                    lp, rp, lev_cap, jw_cap,
-                )
-            else:
-                # pure-Python batch, same semantics (distinct-value
-                # intersects; fallback lev/JW kernels)
-                lev, jw = jw_native.lev_jw_batch_fallback(
-                    lp, rp, lev_cap, jw_cap
-                )
-                gi = np.fromiter(
-                    (
-                        len(
-                            set(lgv[lgo[i]:lgo[i + 1]])
-                            & set(rgv[rgo[i]:rgo[i + 1]])
-                        )
-                        for i in range(n)
-                    ),
-                    np.int32,
-                    count=n,
-                )
-                ti = np.fromiter(
-                    (
-                        len(
-                            set(ltv[lto[i]:lto[i + 1]])
-                            & set(rtv[rto[i]:rto[i + 1]])
-                        )
-                        for i in range(n)
-                    ),
-                    np.int32,
-                    count=n,
-                )
+            gi, ti, lev, jw = jw_native.score_batch_native(
+                lgv, lgo, rgv, rgo, ltv, lto, rtv, rto,
+                lp, rp, lev_cap, jw_cap,
+            )
             yield pa.RecordBatch.from_arrays(
                 [
                     b.column(idx["left_id"]),
@@ -492,27 +395,7 @@ def _score_pairs_arrow(
                 ],
             )
 
-    gi, gl, gr = F.col("_gi"), F.col("_gl"), F.col("_gr")
-    ti, tl, tr = F.col("_ti"), F.col("_tl"), F.col("_tr")
-    # identical expressions (and therefore identical doubles) to the
-    # JVM route's projection below
-    return src.mapInArrow(run, out_schema).select(
-        "left_id",
-        "right_id",
-        "block_key",
-        F.round(
-            F.when(F.least(gl, gr) == 0, F.lit(1.0)).otherwise(gi / F.least(gl, gr)),
-            6,
-        ).alias("bigram_containment"),
-        F.round(
-            F.when(gl + gr - gi == 0, F.lit(1.0)).otherwise(gi / (gl + gr - gi)), 6
-        ).alias("bigram_jaccard"),
-        F.round(
-            F.when(tl + tr - ti == 0, F.lit(1.0)).otherwise(ti / (tl + tr - ti)), 6
-        ).alias("token_jaccard"),
-        F.round(F.col("_lev"), 6).alias("levenshtein"),
-        F.round(F.col("_jw"), 6).alias("jaro_winkler"),
-    )
+    return src.mapInArrow(run, out_schema).select(*_feature_projection())
 
 
 def score_pairs(
@@ -522,56 +405,16 @@ def score_pairs(
     jw_max_len: int = 128,
 ) -> DataFrame:
     """-> (left_id, right_id, block_key, <features>, weight).
-    weight = convex combination of the features.
+    weight = convex combination of the features named in
+    ``feature_weights``; all five features are always emitted.
 
-    Default route (r6): ONE MapInArrow stage computing every per-pair
-    feature in the native scoring kernel — see _score_pairs_arrow.
-    No exchange, no barrier, narrow output rows.
-
-    JVM fallback route (driver without a C compiler, or custom weights
-    omitting jaro_winkler): the r4/r5 two-stage plan below —
-    ONE LINEAR PLAN in two projection stages separated by a NARROW
-    barrier, on purpose:
-
-    - stage 1 (JVM codegen): ONE array_intersect per hash-set pair —
-      containment and jaccard both derive from it via
-      |A ∪ B| = |A| + |B| - |A ∩ B| (arrays are distinct), which
-      removes array_union and a duplicate intersect (measured 28s ->
-      ~7s for the bigram features on 515k pairs) — plus the pair-text
-      prefixes. This is where the wide hashed-array columns die: the
-      stage-1 output row is ids + block_key + 3 doubles + 2 short
-      strings.
-    - stage 2 (Arrow): ONE pandas UDF computing BOTH levenshtein and
-      Jaro-Winkler in a single zero-allocation C pass over the
-      prefixes (functions/jw_native.py). The JVM built-in levenshtein
-      at 256 chars was the single biggest q1 cost (measured 92s for
-      515k pairs — ~11M DP cells/s/core); the C DP runs the same
-      34G cells in ~1s across 32 cores. Falls back to JVM levenshtein
-      + the numpy JW batch when no C compiler is available.
-
-    Why the boundary: without it Catalyst collapses the projections
-    and ExtractPythonUDFs places ArrowEvalPython BELOW the combined
-    projection, streaming the BIG hashed-array columns through the
-    Python workers as pass-through (measured: anti-scaling). Round 2
-    instead split into two branches re-joined on the pair key — but
-    each branch re-evaluated the whole attach-join subtree, so the
-    expensive pairs⋈features join ran twice (three times counting
-    cluster_edges downstream) and bench q1 regressed to 176s. The
-    narrow boundary keeps ONE attach-join evaluation and a ~300 B/row
-    block-store write; throughput is measured by bench.py's
+    ONE MapInArrow stage computes every per-pair feature in the native
+    scoring kernel: the gather route when attach_pair_texts returned
+    the broadcast handle (_score_pairs_gather), else over the joined
+    feature columns (_score_pairs_arrow). No exchange, no barrier,
+    narrow output rows; throughput is measured by bench.py's
     pairs_per_sec (see BENCH.md), not claimed here."""
-    from entityframe_spark.functions import jw_native
-
     w = feature_weights or DEFAULT_WEIGHTS
-
-    def _weighted(scored: DataFrame) -> DataFrame:
-        total = sum(w.values())
-        weight = None
-        for name, coef in w.items():
-            term = F.col(name) * F.lit(coef / total)
-            weight = term if weight is None else weight + term
-        return scored.withColumn("weight", F.round(weight, 6))
-
     bc = getattr(pairs_with_texts, "_ef_pair_features", None)
     if bc is None and "lgrams" not in pairs_with_texts.columns:
         raise ValueError(
@@ -582,104 +425,12 @@ def score_pairs(
             "(checkpoint/select/filter) between attach and score."
         )
     if bc is not None:
-        # attach_pair_texts chose the gather route (guide §8): narrow
-        # pair rows + one broadcast feature table per worker
-        return _weighted(
-            _score_pairs_gather(pairs_with_texts, bc, lev_max_len, jw_max_len)
-        )
-    if "jaro_winkler" in w and jw_native.native_available():
-        return _weighted(
-            _score_pairs_arrow(pairs_with_texts, lev_max_len, jw_max_len)
-        )
-
-    lt, rt = F.col("left_text"), F.col("right_text")
-    gi, gl, gr = F.col("_gi"), F.col("_gl"), F.col("_gr")
-    ti, tl, tr = F.col("_ti"), F.col("_tl"), F.col("_tr")
-    sized = pairs_with_texts.select(
-        "left_id",
-        "right_id",
-        "block_key",
-        F.size(F.array_intersect(F.col("lgrams"), F.col("rgrams"))).alias("_gi"),
-        F.size(F.col("lgrams")).alias("_gl"),
-        F.size(F.col("rgrams")).alias("_gr"),
-        F.size(F.array_intersect(F.col("ltoks"), F.col("rtoks"))).alias("_ti"),
-        F.size(F.col("ltoks")).alias("_tl"),
-        F.size(F.col("rtoks")).alias("_tr"),
-        F.substring(lt, 1, lev_max_len).alias("_lp"),
-        F.substring(rt, 1, lev_max_len).alias("_rp"),
-    )
-    narrow = sized.select(
-        "left_id",
-        "right_id",
-        "block_key",
-        F.round(
-            F.when(F.least(gl, gr) == 0, F.lit(1.0)).otherwise(gi / F.least(gl, gr)),
-            6,
-        ).alias("bigram_containment"),
-        F.round(
-            F.when(gl + gr - gi == 0, F.lit(1.0)).otherwise(gi / (gl + gr - gi)), 6
-        ).alias("bigram_jaccard"),
-        F.round(
-            F.when(tl + tr - ti == 0, F.lit(1.0)).otherwise(ti / (tl + tr - ti)), 6
-        ).alias("token_jaccard"),
-        "_lp",
-        "_rp",
-    )
-    def _barrier(df: DataFrame) -> DataFrame:
-        # projection barrier before the Python stage: an EXCHANGE of
-        # the narrow rows (compressed, a few hundred MB per 10M pairs)
-        # rather than a localCheckpoint — the block-store write+read of
-        # every narrow row was a second non-scaling materialisation.
-        # Catalyst never collapses Projects across an Exchange, so
-        # ArrowEvalPython's pass-through stays narrow (see docstring).
-        n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        return df.repartition(n)
-
-    need_python = "jaro_winkler" in w and jw_native.native_available()
-    if "jaro_winkler" in w and not need_python:
-        # fallback: JVM levenshtein + numpy JW batch
-        narrow = _barrier(
-            narrow.withColumn(
-                "levenshtein",
-                F.round(levenshtein_sim(F.col("_lp"), F.col("_rp"), lev_max_len), 6),
-            )
-        )
-        scored = narrow.withColumn(
-            "jaro_winkler",
-            F.round(jaro_winkler_sim(F.col("_lp"), F.col("_rp"), jw_max_len), 6),
-        ).drop("_lp", "_rp")
-    elif need_python:
-        narrow = _barrier(narrow)
-
-        @F.pandas_udf("lev double, jw double")
-        def _lev_jw(a, b):
-            import pandas as pd
-
-            # re-check ON THE WORKER: a heterogeneous cluster can have
-            # compiler-less executors even when the driver compiled fine
-            # (ADVICE r3); the pure-Python batch is semantics-identical
-            batch = (
-                jw_native.lev_jw_batch_native
-                if jw_native.native_available()
-                else jw_native.lev_jw_batch_fallback
-            )
-            lev, jw = batch(
-                a.fillna("").tolist(),
-                b.fillna("").tolist(),
-                lev_max_len,
-                jw_max_len,
-            )
-            return pd.DataFrame({"lev": lev, "jw": jw})
-
-        scored = (
-            narrow.withColumn("_s", _lev_jw(F.col("_lp"), F.col("_rp")))
-            .withColumn("levenshtein", F.round(F.col("_s.lev"), 6))
-            .withColumn("jaro_winkler", F.round(F.col("_s.jw"), 6))
-            .drop("_lp", "_rp", "_s")
-        )
+        scored = _score_pairs_gather(pairs_with_texts, bc, lev_max_len, jw_max_len)
     else:
-        scored = narrow.withColumn(
-            "levenshtein",
-            F.round(levenshtein_sim(F.col("_lp"), F.col("_rp"), lev_max_len), 6),
-        ).drop("_lp", "_rp")
-    return _weighted(scored)
+        scored = _score_pairs_arrow(pairs_with_texts, lev_max_len, jw_max_len)
+    total = sum(w.values())
+    weight = None
+    for name, coef in w.items():
+        term = F.col(name) * F.lit(coef / total)
+        weight = term if weight is None else weight + term
+    return scored.withColumn("weight", F.round(weight, 6))

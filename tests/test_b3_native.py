@@ -1,5 +1,6 @@
-"""BLAKE3 kernels (functions/b3_native.py): published-vector pins,
-C-vs-Python cross-parity, and the entity_hashes blake3 column.
+"""BLAKE3 kernel (functions/b3_native.py): published-vector pins,
+cross-parity with the Python spec oracle (tests/oracles.py), and the
+entity_hashes blake3 column.
 
 The two implementations are deliberately structured differently
 (recursive subtree split in C, spec chunk-stack in Python) so a
@@ -12,6 +13,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from entityframe_spark.functions import b3_native
+from tests.oracles import blake3_hex_py
 
 # Official test vectors (BLAKE3 repo test_vectors.json: input byte i
 # is i % 251; digests truncated to the default 32 bytes).
@@ -27,13 +29,11 @@ def _msg(n: int) -> bytes:
 
 @pytest.mark.parametrize("length,hexdigest", sorted(_VECTORS.items()))
 def test_published_vectors_python(length, hexdigest):
-    assert b3_native.blake3_hex_py(_msg(length)) == hexdigest
+    assert blake3_hex_py(_msg(length)) == hexdigest
 
 
 @pytest.mark.parametrize("length,hexdigest", sorted(_VECTORS.items()))
 def test_published_vectors_batch(length, hexdigest):
-    # native kernel when a compiler exists, python path otherwise —
-    # either way the public batch API must hit the vector
     assert b3_native.blake3_hex_batch([_msg(length)]) == [hexdigest]
 
 
@@ -44,7 +44,7 @@ def test_wheel_parity_if_installed():
         pytest.skip("blake3 wheel not installed in this container")
     for n in (0, 1, 65, 1024, 1025, 3072, 5000):
         m = _msg(n)
-        assert b3_native.blake3_hex_py(m) == blake3.blake3(m).hexdigest()
+        assert blake3_hex_py(m) == blake3.blake3(m).hexdigest()
 
 
 @pytest.mark.parametrize(
@@ -55,18 +55,14 @@ def test_wheel_parity_if_installed():
 def test_c_python_cross_parity_boundaries(length):
     """Every chunk/block/tree boundary: the recursive-split C kernel
     and the chunk-stack Python implementation must agree."""
-    if not b3_native.native_available():
-        pytest.skip("no C compiler on this host")
     m = _msg(length)
-    assert b3_native.blake3_hex_batch([m]) == [b3_native.blake3_hex_py(m)]
+    assert b3_native.blake3_hex_batch([m]) == [blake3_hex_py(m)]
 
 
 @settings(max_examples=30, deadline=None)
 @given(st.binary(min_size=0, max_size=4096))
 def test_c_python_cross_parity_random(data):
-    if not b3_native.native_available():
-        pytest.skip("no C compiler on this host")
-    assert b3_native.blake3_hex_batch([data]) == [b3_native.blake3_hex_py(data)]
+    assert b3_native.blake3_hex_batch([data]) == [blake3_hex_py(data)]
 
 
 def test_batch_packing_independent_of_neighbors():
@@ -74,7 +70,7 @@ def test_batch_packing_independent_of_neighbors():
     must depend only on its own slice (offset bookkeeping)."""
     vals = [b"", _msg(1), b"hello", _msg(1025), b"", _msg(70)]
     got = b3_native.blake3_hex_batch(vals)
-    assert got == [b3_native.blake3_hex_py(v) for v in vals]
+    assert got == [blake3_hex_py(v) for v in vals]
     assert got[0] == _VECTORS[0] and got[1] == _VECTORS[1]
 
 
@@ -93,5 +89,5 @@ def test_entity_hashes_blake3_column(spark):
         r["cluster_id"]: r["blake3"]
         for r in entity_hashes(part, records, algorithms=("blake3",)).collect()
     }
-    assert rows[10] == b3_native.blake3_hex_py(b"a,b")
-    assert rows[2] == b3_native.blake3_hex_py(b"c")
+    assert rows[10] == blake3_hex_py(b"a,b")
+    assert rows[2] == blake3_hex_py(b"c")

@@ -7,9 +7,9 @@ import pytest
 from entityframe_spark.operators.components import (
     connected_components,
     connected_components_blocked,
-    union_find_numpy,
 )
 from tests.conftest import clusters_as_sets
+from tests.oracles import union_find_numpy
 
 
 def _cc_sets(spark, edges, **kw):

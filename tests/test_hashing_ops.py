@@ -43,9 +43,10 @@ def test_entity_hashes_known_digests(spark, small_partition):
 
 def test_blake3_works_without_wheel(spark, small_partition):
     """blake3 no longer degrades when the wheel is absent: the repo's
-    own spec implementation (b3_native, vector-pinned in
-    tests/test_b3_native.py) computes the digest."""
-    from entityframe_spark.functions import b3_native, hashing
+    own C kernel (b3_native, vector-pinned in tests/test_b3_native.py)
+    computes the digest."""
+    from entityframe_spark.functions import hashing
+    from tests.oracles import blake3_hex_py
 
     part, recs = small_partition
     rows = {
@@ -54,7 +55,7 @@ def test_blake3_works_without_wheel(spark, small_partition):
     }
     for r in hashing.entity_hashes(part, recs, ()).collect():
         canon = ",".join(r["members"]).encode()
-        assert rows[r["cluster_id"]] == b3_native.blake3_hex_py(canon)
+        assert rows[r["cluster_id"]] == blake3_hex_py(canon)
 
 
 def test_entity_density(spark, small_partition):

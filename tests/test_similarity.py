@@ -1,18 +1,34 @@
-"""Similarity-function unit tests: vectorized Jaro-Winkler parity
-with the scalar reference, ANSI-safe n-gram builders on degenerate
-texts, simhash vectorization, LRU cache semantics."""
+"""Similarity-function unit tests: the C scoring kernel's
+Jaro-Winkler, Levenshtein and intersect sizes against the scalar
+oracles (tests/oracles.py) and the JVM expressions, ANSI-safe n-gram
+builders on degenerate texts, simhash vectorization, LRU cache
+semantics."""
 
 from __future__ import annotations
 
 import random
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from entityframe_spark.functions.similarity import (
-    _jaro_winkler,
-    jaro_winkler_batch,
-)
+from entityframe_spark.functions import jw_native
+from tests.oracles import _jaro_winkler, _lev_sim_py
+
+
+def lev_jw(a_strs, b_strs, lev_max_len=256, jw_max_len=128):
+    """(levenshtein, jaro_winkler) arrays from the scoring kernel, run
+    with empty hash arrays (the intersect sizes are then all 0)."""
+    e = np.zeros(0, np.int64)
+    off = np.zeros(len(a_strs) + 1, np.int64)
+    _, _, lev, jw = jw_native.score_batch_native(
+        e, off, e, off, e, off, e, off, a_strs, b_strs, lev_max_len, jw_max_len
+    )
+    return lev, jw
+
+
+def jaro_winkler_batch(a_strs, b_strs, max_len=128):
+    return lev_jw(a_strs, b_strs, jw_max_len=max_len)[1]
 
 
 def _rand_str(rng: random.Random, maxlen: int, alpha: str) -> str:
@@ -155,16 +171,6 @@ def test_native_lev_jw_parity_vs_scalar_and_jvm(spark):
     """The C kernel must match (a) the scalar _jaro_winkler reference
     bit-for-bit and (b) Spark's built-in levenshtein on the same
     truncated prefixes."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    from entityframe_spark.functions import jw_native
-
-    if not jw_native.native_available():
-        import pytest
-
-        pytest.skip("no C compiler on this host")
     random.seed(7)
     vocab = "run query check status deploy kindly execute failure".split()
     pairs = [("", ""), ("a", ""), ("", "b"), ("martha", "marhta"), ("ab", "ba")]
@@ -178,7 +184,7 @@ def test_native_lev_jw_parity_vs_scalar_and_jvm(spark):
         pairs.append((a, b))
     av = [p[0] for p in pairs]
     bv = [p[1] for p in pairs]
-    lev, jw = jw_native.lev_jw_batch_native(av, bv, 256, 128)
+    lev, jw = lev_jw(av, bv, 256, 128)
     for (a, b), got in zip(pairs, jw):
         assert abs(got - _jaro_winkler(a[:128], b[:128])) < 1e-12, (a, b)
     # same 256-truncation contract as levenshtein_sim / the C kernel
@@ -203,22 +209,17 @@ def test_native_lev_jw_parity_vs_scalar_and_jvm(spark):
         assert abs(got - want) < 1e-12, (a, b, got, want)
 
 
-def test_lev_jw_fallback_matches_native_when_jw_prefix_longer():
-    """ADVICE r4: with jw_max_len > lev_max_len the fallback must slice
-    the JW inputs from the ORIGINAL strings, exactly like the native
-    kernel — not from the lev-truncated copies."""
-    import pytest
-
-    from entityframe_spark.functions import jw_native
-
-    if not jw_native.native_available():
-        pytest.skip("no C compiler on this host")
+def test_lev_jw_kernel_matches_oracles_when_jw_prefix_longer():
+    """ADVICE r4: with jw_max_len > lev_max_len the kernel must slice
+    the JW inputs from the ORIGINAL strings — not from the
+    lev-truncated copies."""
     a = ["abcdefghij" * 3, "martha" * 5, "", "xy"]
     b = ["abcdefghiX" * 3, "marhta" * 5, "q", "xy"]
-    lev_n, jw_n = jw_native.lev_jw_batch_native(a, b, lev_max_len=8, jw_max_len=24)
-    lev_f, jw_f = jw_native.lev_jw_batch_fallback(a, b, lev_max_len=8, jw_max_len=24)
-    assert lev_n == pytest.approx(lev_f.tolist())
-    assert jw_n == pytest.approx(jw_f.tolist())
+    lev, jw = lev_jw(a, b, lev_max_len=8, jw_max_len=24)
+    want_lev = [_lev_sim_py(x[:8], y[:8]) for x, y in zip(a, b)]
+    want_jw = [_jaro_winkler(x[:24], y[:24]) for x, y in zip(a, b)]
+    assert lev.tolist() == pytest.approx(want_lev, abs=1e-12)
+    assert jw.tolist() == pytest.approx(want_jw, abs=1e-12)
 
 
 def test_myers_lev_matches_plain_dp_across_block_boundaries():
@@ -226,15 +227,6 @@ def test_myers_lev_matches_plain_dp_across_block_boundaries():
     blocks). Distances must equal the plain DP exactly — especially at
     word-boundary pattern lengths (63..66, 127..130) and with repeated
     characters, where block carry bugs hide."""
-    import random
-
-    import pytest
-
-    from entityframe_spark.functions import jw_native
-
-    if not jw_native.native_available():
-        pytest.skip("no C compiler on this host")
-
     def dp(a, b):
         la, lb = len(a), len(b)
         if la == 0:
@@ -278,7 +270,7 @@ def test_myers_lev_matches_plain_dp_across_block_boundaries():
         cases.append((a, b))
     av = [c[0] for c in cases]
     bv = [c[1] for c in cases]
-    lev, _ = jw_native.lev_jw_batch_native(av, bv, 1024, 128)
+    lev, _ = lev_jw(av, bv, 1024, 128)
     for (a, b), got in zip(cases, lev):
         if not a and not b:
             want = 1.0
@@ -291,18 +283,12 @@ def test_myers_lev_matches_plain_dp_across_block_boundaries():
 
 def test_score_batch_native_matches_jvm_feature_path(spark):
     """r6: the fused Arrow scoring route (C intersects + lev/JW) must
-    produce bit-identical feature values to the JVM
-    array_intersect + builtin-levenshtein route on the same pairs —
-    including unsorted hash arrays (kernel sorts internally)."""
-    import pytest
+    produce bit-identical feature values to JVM
+    size(array_intersect) + builtin-levenshtein expressions on the same
+    pairs — including unsorted hash arrays (kernel sorts internally)."""
+    from entityframe_spark.functions.similarity import levenshtein_sim
+    from entityframe_spark.pipeline.scoring import DEFAULT_WEIGHTS, score_pairs
 
-    from pyspark.sql import functions as F
-
-    from entityframe_spark.functions import jw_native
-    from entityframe_spark.pipeline.scoring import score_pairs
-
-    if not jw_native.native_available():
-        pytest.skip("no C compiler on this host")
     rows = [
         (1, 2, "k", "alpha beta gamma", "alpha beta delta",
          [3, 1, 2], [2, 3, 9], [10, 11], [11, 12]),
@@ -321,15 +307,49 @@ def test_score_batch_native_matches_jvm_feature_path(spark):
         (r["left_id"], r["right_id"]): r
         for r in score_pairs(df).collect()
     }
-    orig = jw_native.native_available
-    try:
-        jw_native.native_available = lambda: False  # force the JVM route
-        old = {
-            (r["left_id"], r["right_id"]): r
-            for r in score_pairs(df).collect()
-        }
-    finally:
-        jw_native.native_available = orig
+    # the JVM feature expressions, with JW from the scalar oracle
+    jw = spark.createDataFrame(
+        [(r[0], r[1], _jaro_winkler(r[3][:128], r[4][:128])) for r in rows],
+        "left_id long, right_id long, _jw double",
+    )
+    gi, gl, gr = F.col("_gi"), F.col("_gl"), F.col("_gr")
+    ti, tl, tr = F.col("_ti"), F.col("_tl"), F.col("_tr")
+    jvm = df.join(jw, ["left_id", "right_id"]).select(
+        "left_id",
+        "right_id",
+        F.size(F.array_intersect(F.col("lgrams"), F.col("rgrams"))).alias("_gi"),
+        F.size(F.col("lgrams")).alias("_gl"),
+        F.size(F.col("rgrams")).alias("_gr"),
+        F.size(F.array_intersect(F.col("ltoks"), F.col("rtoks"))).alias("_ti"),
+        F.size(F.col("ltoks")).alias("_tl"),
+        F.size(F.col("rtoks")).alias("_tr"),
+        levenshtein_sim(F.col("left_text"), F.col("right_text"), 256).alias("_lev"),
+        "_jw",
+    ).select(
+        "left_id",
+        "right_id",
+        F.round(
+            F.when(F.least(gl, gr) == 0, F.lit(1.0)).otherwise(gi / F.least(gl, gr)),
+            6,
+        ).alias("bigram_containment"),
+        F.round(
+            F.when(gl + gr - gi == 0, F.lit(1.0)).otherwise(gi / (gl + gr - gi)), 6
+        ).alias("bigram_jaccard"),
+        F.round(
+            F.when(tl + tr - ti == 0, F.lit(1.0)).otherwise(ti / (tl + tr - ti)), 6
+        ).alias("token_jaccard"),
+        F.round(F.col("_lev"), 6).alias("levenshtein"),
+        F.round(F.col("_jw"), 6).alias("jaro_winkler"),
+    )
+    total = sum(DEFAULT_WEIGHTS.values())
+    weight = None
+    for name, coef in DEFAULT_WEIGHTS.items():
+        term = F.col(name) * F.lit(coef / total)
+        weight = term if weight is None else weight + term
+    old = {
+        (r["left_id"], r["right_id"]): r
+        for r in jvm.withColumn("weight", F.round(weight, 6)).collect()
+    }
     assert set(new) == set(old)
     cols = [
         "bigram_containment", "bigram_jaccard", "token_jaccard",
@@ -340,24 +360,52 @@ def test_score_batch_native_matches_jvm_feature_path(spark):
             assert new[k][c] == old[k][c], (k, c, new[k][c], old[k][c])
 
 
+def test_score_batch_heap_scratch_matches_set_intersection():
+    """A pair with more than 16,384 combined UNSORTED hash values sorts
+    them into heap scratch (the static buffer is too small); sizes must
+    still equal Python set intersections, for that pair and for the
+    small pair after it."""
+    rng = np.random.default_rng(3)
+    a = rng.integers(0, 30_000, 9_000)
+    b = rng.integers(0, 30_000, 9_000)
+    a2, b2 = np.array([5, 1, 5, 3]), np.array([3, 9, 5])
+    lv, lo = np.concatenate([a, a2]), np.array([0, len(a), len(a) + len(a2)])
+    rv, ro = np.concatenate([b, b2]), np.array([0, len(b), len(b) + len(b2)])
+    gi, ti, _, _ = jw_native.score_batch_native(
+        lv, lo, rv, ro, rv, ro, lv, lo, ["x", "y"], ["x", "z"]
+    )
+    want = [len(set(a.tolist()) & set(b.tolist())), 2]
+    assert gi.tolist() == want
+    assert ti.tolist() == want
+
+
+def test_score_batch_scratch_allocation_failure_raises(monkeypatch):
+    """When the kernel reports that malloc failed for a pair (a NULL
+    that cannot be forced portably, so a stand-in kernel reports it),
+    the wrapper raises MemoryError naming that pair's array sizes."""
+
+    class _FailingKernel:
+        def score_batch(self, *args):
+            return 1  # index of the pair whose scratch allocation failed
+
+    monkeypatch.setattr(jw_native.KERNEL, "_lib", _FailingKernel())
+    v = np.arange(6, dtype=np.int64)
+    off = np.array([0, 1, 4])
+    with pytest.raises(MemoryError, match=r"pair 1 \(gram arrays 3 \+ 3, token arrays 3 \+ 3"):
+        jw_native.score_batch_native(v, off, v, off, v, off, v, off, ["a", "b"], ["a", "b"])
+
+
 def test_gather_route_matches_join_route(spark):
     """r6: attach_pair_texts' gather route (python-broadcast feature
     table + narrow pair stream) must score identically to the wide
     broadcast-join route, and drop pairs whose ids lack features (the
     join route's inner-join semantics)."""
-    import pytest
-
-    from pyspark.sql import functions as F
-
-    from entityframe_spark.functions import jw_native
     from entityframe_spark.pipeline.scoring import (
         attach_pair_texts,
         prepare_record_features,
         score_pairs,
     )
 
-    if not jw_native.native_available():
-        pytest.skip("no C compiler on this host")
     feats = prepare_record_features(
         spark.createDataFrame(
             [(1, "alpha beta gamma delta"), (2, "alpha beta gamma"),
@@ -394,21 +442,34 @@ def test_gather_route_matches_join_route(spark):
         score_pairs(attached.localCheckpoint(eager=False))
 
 
+def test_gather_route_empty_feature_table_scores_nothing(spark):
+    """ADVICE r6: an empty feature table on the gather route yields no
+    rows — the join route's inner-join semantics — instead of an
+    IndexError in the worker."""
+    from entityframe_spark.pipeline.scoring import (
+        attach_pair_texts,
+        prepare_record_features,
+        score_pairs,
+    )
+
+    empty = prepare_record_features(
+        spark.createDataFrame([], "record_id long, full_text string")
+    )
+    pairs = spark.createDataFrame(
+        [(1, 2, "k1"), (3, 4, "k2")],
+        "left_id long, right_id long, block_key string",
+    )
+    attached = attach_pair_texts(pairs, empty, features_count=0)
+    assert hasattr(attached, "_ef_pair_features")  # the gather route
+    assert score_pairs(attached).count() == 0
+
+
 def test_bitparallel_jw_matches_scalar_reference():
     """r6: the C Jaro-Winkler greedy matcher went bit-parallel for
     strings <= 512 codepoints (lowest-set-bit = the scalar loop's
     lowest-available-window-match, so the greedy choice is identical).
     Pin it against the scalar reference across word boundaries,
     transposition-heavy shuffles and small alphabets."""
-    import random
-
-    import pytest
-
-    from entityframe_spark.functions import jw_native
-    from entityframe_spark.functions.similarity import _jaro_winkler
-
-    if not jw_native.native_available():
-        pytest.skip("no C compiler on this host")
     rng = random.Random(123)
     alphas = ["ab", "abcdefgh", "".join(chr(0x100 + i) for i in range(20))]
     cases = [
@@ -445,7 +506,7 @@ def test_bitparallel_jw_matches_scalar_reference():
         cases.append((a, b))
     av = [c[0] for c in cases]
     bv = [c[1] for c in cases]
-    jw = jw_native.jw_batch_native(av, bv, max_len=256)
+    jw = jaro_winkler_batch(av, bv, max_len=256)
     for (a, b), got in zip(cases, jw):
         assert abs(got - _jaro_winkler(a[:256], b[:256])) < 1e-12, (a[:40], b[:40])
 
@@ -456,16 +517,8 @@ def test_native_lsh_band_hashes_match_python_reference():
     (zlib CRC-32 over utf-8 shingle bytes, int64 mul-mod, band crc
     over little-endian signature bytes) — including unicode, empty and
     shorter-than-k texts."""
-    import random
     import zlib
 
-    import numpy as np
-    import pytest
-
-    from entityframe_spark.functions import jw_native
-
-    if not jw_native.native_available():
-        pytest.skip("no C compiler on this host")
     rng = random.Random(5)
     vocab = "the quick brown fox käfer straße 中文字符 émoji".split()
     texts = ["", "a", "abcde", "日本語のテキスト"]

@@ -70,9 +70,16 @@ def test_spark_submit_pyfiles_end_to_end(spark, tmp_path):
     # the zip must not be trivially empty and must contain the package
     import zipfile
 
+    from entityframe_spark.functions import b3_native, jw_native, uf_native
+
     names = zipfile.ZipFile(zip_path).namelist()
     assert "entityframe_spark/__init__.py" in names
     assert len(names) > 20
+    # the three prebuilt kernels ride along for compiler-less executors
+    assert {n for n in names if n.endswith(".so")} == {
+        f"entityframe_spark/functions/{k.name}"
+        for k in (jw_native.KERNEL, uf_native.KERNEL, b3_native.KERNEL)
+    }
 
     transcripts, truth = synthesize_transcripts(spark, n_conversations=200)
     t_path, y_path = str(tmp_path / "transcripts"), str(tmp_path / "truth")

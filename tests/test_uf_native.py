@@ -1,17 +1,16 @@
 """Parity tests: the C union-find kernels (functions/uf_native.py)
-must be event-for-event identical to the pure-Python union-find paths
-they replace (components.union_find_numpy, the hierarchy sweep
-fallback) — same merge events in the same order, same labels."""
+must be event-for-event identical to the scalar union-find oracles in
+tests/oracles.py (union_find_numpy, single_linkage_sweep_py) — same
+merge events in the same order, same labels."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pytest
 
 from entityframe_spark.functions import uf_native
 from entityframe_spark.operators import hierarchy as H
-from entityframe_spark.operators.components import union_find_numpy
+from tests.oracles import single_linkage_sweep_py, union_find_numpy
 
 
 def _random_graph(rng, n_max=60, m_max=200):
@@ -25,7 +24,6 @@ def _random_graph(rng, n_max=60, m_max=200):
     return src[keep], dst[keep]
 
 
-@pytest.mark.skipif(not uf_native.native_available(), reason="no C compiler")
 def test_components_kernel_matches_union_find_numpy():
     rng = np.random.RandomState(42)
     for _ in range(50):
@@ -40,9 +38,8 @@ def test_components_kernel_matches_union_find_numpy():
         assert np.array_equal(expected, got)
 
 
-@pytest.mark.skipif(not uf_native.native_available(), reason="no C compiler")
 def test_single_linkage_kernel_matches_python_sweep():
-    """Sized sweep: kernel and Python fallback emit IDENTICAL event
+    """Sized sweep: kernel and the Python oracle emit IDENTICAL event
     sequences (same order, children, parents, sizes) — the dendrogram
     is pinned bit-for-bit, not just partition-equivalent."""
     rng = np.random.RandomState(7)
@@ -54,17 +51,16 @@ def test_single_linkage_kernel_matches_python_sweep():
         w = rng.randint(1, 10, len(src)).astype(np.int64) * 100_000
         pdf = pd.DataFrame({"src": src, "dst": dst, "w_fp": w})
         native = H._local_single_linkage_sized(pdf.copy())
-        uf_native._lib, uf_native._tried = None, True  # force fallback
-        try:
-            fallback = H._local_single_linkage_sized(pdf.copy())
-        finally:
-            uf_native._tried = False  # recompile lazily on next use
-        assert native.reset_index(drop=True).equals(fallback.reset_index(drop=True))
+        order = np.lexsort((dst, src, -w))
+        t, c, p, ls, rs = single_linkage_sweep_py(src[order], dst[order], w[order])
+        oracle = pd.DataFrame(
+            {"threshold_fp": t, "child": c, "parent": p, "left_size": ls, "right_size": rs}
+        )
+        assert native.reset_index(drop=True).equals(oracle)
         ran += 1
     assert ran > 30
 
 
-@pytest.mark.skipif(not uf_native.native_available(), reason="no C compiler")
 def test_grid_labels_kernel_matches_incremental_python():
     rng = np.random.RandomState(13)
     for _ in range(30):
@@ -91,7 +87,6 @@ def test_grid_labels_kernel_matches_incremental_python():
             assert np.array_equal(expected, nodes[labels[g]])
 
 
-@pytest.mark.skipif(not uf_native.native_available(), reason="no C compiler")
 def test_msf_mask_kernel_keeps_exactly_the_sweep_tree_edges():
     """The Kruskal keep-mask must select exactly the edges that cause
     unions in the single-linkage sweep under the same canonical

@@ -2,12 +2,13 @@
 
 Usage: python tools/make_pyfiles_zip.py [out.zip]
 
-Zips the pure-Python package (sources only — the native C kernels
-compile themselves on first use per worker, falling back to the
-numpy/JVM paths on compiler-less executors; see functions/jw_native.py
-and functions/uf_native.py). The zip root contains the package dir, so
-`--py-files out.zip` makes `import entityframe_spark` work on driver
-and executors alike.
+Zips the package sources plus the three prebuilt native kernels
+(``entityframe_spark/functions/ef_<tag>_<digest>.so``: scoring/LSH,
+union-find, BLAKE3), built here with ``cc`` when the local cache lacks
+them. Executors load the kernels from the zip through
+``functions/native.py``, so they need no C compiler. The zip root
+contains the package dir, so `--py-files out.zip` makes
+`import entityframe_spark` work on driver and executors alike.
 """
 
 from __future__ import annotations
@@ -17,6 +18,10 @@ import sys
 import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+if REPO not in sys.path:
+    sys.path.insert(0, REPO)  # the kernels are built from this checkout
+
+from entityframe_spark.functions import b3_native, jw_native, uf_native  # noqa: E402
 
 
 def build(out_path: str) -> str:
@@ -30,6 +35,8 @@ def build(out_path: str) -> str:
                     continue
                 full = os.path.join(root, name)
                 zf.write(full, os.path.relpath(full, REPO))
+        for kernel in (jw_native.KERNEL, uf_native.KERNEL, b3_native.KERNEL):
+            zf.write(kernel.build(), f"entityframe_spark/functions/{kernel.name}")
     return out_path
 
 

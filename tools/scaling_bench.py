@@ -223,7 +223,7 @@ own memory subsystem. Two mitigations shipped: (1)
 pre-zeroes the whole heap at JVM startup (one untimed cost) so
 steady-state JVM allocation never faults fresh pages — halved the
 best 32-core scoring wall (35.0s -> 17.7s on the x8 workload); (2)
-`entityframe_spark/functions/jw_native.tune_allocator`: python
+`entityframe_spark/functions/native.tune_allocator`: python
 workers raise glibc's M_MMAP_THRESHOLD/M_TRIM_THRESHOLD so the
 multi-MB per-batch scoring buffers are reused warm on the heap
 instead of re-mmapped and re-faulted every batch — this took the
