@@ -3,16 +3,41 @@
 API parity with the reference's ``Collection``
 (src/python/starlings/__init__.py:120-236,
 src/rust/starlings-py/src/lib.rs:127-189): build from weighted edges,
-materialise the partition at any threshold, list entities. The
-in-memory LRU partition cache (builder.rs:41,264-273) becomes
-``.persist()`` on materialised membership DataFrames keyed by
-fixed-point threshold.
+materialise the partition at any threshold, list entities.
+
+Two caches stand in for the reference's 10-entry partition LRU
+(builder.rs:41,253-328):
+
+- ``at()`` returns the partition as a DataFrame, persisted and kept in
+  an LRU of ``_CACHE_SIZE`` entries keyed by fixed-point threshold.
+  ``entities()`` and every EntityFrame path read it (or the dendrogram)
+  through Spark.
+- The scalar point queries ``entity_count``, ``find_entity_for_record``
+  and ``contains_record`` read a driver-side dendrogram index instead.
+  The first point query on a Collection builds it with one count probe
+  and one Arrow collect of the record ids and merge edges; after that a
+  point query runs no Spark job. A threshold the index has not seen
+  costs one O(records + merges) run of the grid union-find kernel for
+  one label row, and the last ``_CACHE_SIZE`` rows stay in an LRU, so
+  repeated thresholds are O(1) counts and O(log records) lookups.
+
+The index is used while ``records x _CACHE_SIZE`` fits the fused
+single-task cell budget of ``hierarchy.memberships_for_grid`` (50M
+cells, so up to 5M records) and the merge edges fit its single-task
+bound (20M). It then holds 8 bytes per record for the sorted ids,
+24 per merge edge and 8 per record for each cached label row. A
+dendrogram has fewer merge edges than records, so that is at most
+about 0.6 GB at the bound and under 2 MB for a 15k-record collection.
+Above either bound the point queries answer from ``at()`` through
+Spark, as before.
 """
 
 from __future__ import annotations
 
 from collections import OrderedDict
 from typing import Iterable
+
+import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,9 +49,58 @@ from entityframe_spark.core.quantize import (
     threshold_to_fp,
 )
 from entityframe_spark.core.records import DEFAULT_SOURCE, intern_records, resolve_edge_keys
+from entityframe_spark.functions import uf_native
 from entityframe_spark.operators import hierarchy
 
 _CACHE_SIZE = 10  # reference builder.rs:41
+
+
+def _threshold_fp(threshold: float) -> int:
+    if not (0.0 <= threshold <= 1.0):
+        raise ValueError(f"threshold must be in [0, 1], got {threshold}")
+    return threshold_to_fp(threshold)
+
+
+class _PointIndex:
+    """The dendrogram on the driver: sorted record ids, merge edges as
+    indices into them, and an LRU of per-threshold label rows (the root
+    index of every record, so ``nodes[row[i]]`` is record i's
+    cluster_id, the min record id of its cluster)."""
+
+    def __init__(self, records: DataFrame, merge_edges: DataFrame):
+        # record ids are deduplicated here, not by a Spark shuffle: one
+        # job fewer for the first point query. The package's record
+        # frames carry distinct ids, so this collects the rows the
+        # probe counted.
+        stream = hierarchy._dendrogram_stream(records, merge_edges).toArrow()
+        self.nodes, self._ch, self._pa, self._tf = hierarchy._dendrogram_arrays(
+            *hierarchy._split_stream([stream.to_pandas()])
+        )
+        self._rows: OrderedDict[int, tuple[np.ndarray, int]] = OrderedDict()
+
+    def labels(self, t_fp: int) -> tuple[np.ndarray, int]:
+        """(label row, entity count) at ``t_fp``: move-to-end on a hit,
+        evict the oldest row past ``_CACHE_SIZE`` (builder.rs:41)."""
+        if t_fp in self._rows:
+            self._rows.move_to_end(t_fp)
+            return self._rows[t_fp]
+        n = len(self.nodes)
+        row = uf_native.grid_labels_native(
+            self._ch, self._pa, self._tf, n, np.array([t_fp], dtype=np.int64)
+        )[0]
+        entry = row, int(np.count_nonzero(row == np.arange(n)))
+        if len(self._rows) >= _CACHE_SIZE:
+            self._rows.popitem(last=False)
+        self._rows[t_fp] = entry
+        return entry
+
+    def position(self, record_id: int) -> int | None:
+        """Index of ``record_id`` in ``nodes``, None when it is not in
+        the record space."""
+        if not -(2**63) <= record_id < 2**63:
+            return None
+        i = int(np.searchsorted(self.nodes, record_id))
+        return i if i < len(self.nodes) and self.nodes[i] == record_id else None
 
 
 class Collection:
@@ -59,7 +133,11 @@ class Collection:
         # true LRU (move-to-end on hit, evict oldest), matching the
         # reference's partition cache semantics (builder.rs:41,264-273)
         self._cache: OrderedDict[int, DataFrame] = OrderedDict()
-        self._n_records: int | None = None
+        # shared by sweep's gate and the point-query index bound
+        self._counts: tuple[int, int] | None = None
+        # driver-side dendrogram for the point queries, built by the
+        # first one that fits the index bound
+        self._index: _PointIndex | None = None
         # merge-forest components, computed lazily on the first
         # merges_affecting_record point lookup and reused after
         # (merge_edges is immutable per Collection instance)
@@ -149,25 +227,26 @@ class Collection:
         """Point this collection at a (grown) shared record space — the
         Spark analogue of the reference's append-only DataContext
         gaining records: existing hierarchies see them as isolates.
-        Invalidates the partition cache (old partitions lack the new
-        singletons)."""
+        Invalidates the partition cache and the point-query index (old
+        partitions and label rows lack the new singletons)."""
         for cached in self._cache.values():
             cached.unpersist()
         self._cache.clear()
         self.records = records
-        self._n_records = None
+        self._counts = None
+        self._index = None
 
     # -- queries -----------------------------------------------------------
 
     def at(self, threshold: float) -> DataFrame:
         """Partition at ``threshold`` (inclusive >= semantics,
         builder.rs:291). Returns DataFrame(record_id, cluster_id);
-        cluster_id = min record_id in the cluster. Persisted LRU-style
-        like the reference's partition cache.
+        cluster_id = min record id in the cluster. The DataFrame is
+        persisted and kept in an LRU of ``_CACHE_SIZE`` partitions,
+        like the reference's partition cache; the point queries below
+        read the driver-side index instead while it fits.
         """
-        if not (0.0 <= threshold <= 1.0):
-            raise ValueError(f"threshold must be in [0, 1], got {threshold}")
-        t_fp = threshold_to_fp(threshold)
+        t_fp = _threshold_fp(threshold)
         if t_fp in self._cache:
             self._cache.move_to_end(t_fp)
             return self._cache[t_fp]
@@ -193,35 +272,73 @@ class Collection:
             )
         )
 
-    def entity_count(self, threshold: float) -> int:
-        return self.at(threshold).select("cluster_id").distinct().count()
+    # -- point queries (P5, partition.rs:69-80) -----------------------------
 
-    # -- membership predicates (P5, partition.rs:69-80) ---------------------
+    def _record_counts(self) -> tuple[int, int]:
+        """(distinct records, merge edges): one probe, kept until
+        rebind_records."""
+        if self._counts is None:
+            self._counts = hierarchy._dendrogram_counts(
+                hierarchy._record_ids(self.records), self.merge_edges
+            )
+        return self._counts
+
+    def _point_index(self) -> _PointIndex | None:
+        """The driver-side dendrogram index, built by the first point
+        query, or None above its bound (see the module docstring)."""
+        if self._index is None:
+            n_rec, n_me = self._record_counts()
+            if (
+                n_rec * _CACHE_SIZE <= hierarchy._MAX_LOCAL_CELLS
+                and n_me <= hierarchy._LOCAL_MERGE_EDGES
+            ):
+                self._index = _PointIndex(self.records, self.merge_edges)
+        return self._index
+
+    def entity_count(self, threshold: float) -> int:
+        """Number of entities at ``threshold``, isolates included: the
+        roots of the index's label row, or a distinct count of
+        ``at(threshold)`` above the index bound."""
+        t_fp = _threshold_fp(threshold)
+        index = self._point_index()
+        if index is None:
+            return self.at(threshold).select("cluster_id").distinct().count()
+        return index.labels(t_fp)[1]
 
     def contains_record(self, record_id: int, threshold: float) -> bool:
         """P5: does any entity at ``threshold`` contain this record?
         (reference Partition.contains_record, partition.rs:69-74).
         Partitions cover the whole record space, so this is a record-
-        space membership test; the partition filter keeps the
-        semantics exact if the space and hierarchy ever diverge."""
-        return (
-            self.at(threshold).where(F.col("record_id") == int(record_id)).limit(1).count()
-            > 0
-        )
+        space membership test: a binary search of the index's record
+        ids, or a filter of ``at(threshold)`` above the index bound."""
+        _threshold_fp(threshold)
+        index = self._point_index()
+        if index is None:
+            return (
+                self.at(threshold).where(F.col("record_id") == int(record_id)).limit(1).count()
+                > 0
+            )
+        return index.position(int(record_id)) is not None
 
     def find_entity_for_record(self, record_id: int, threshold: float) -> int | None:
         """P5: the entity (cluster_id) containing ``record_id`` at
-        ``threshold``, or None (reference find_entity_for_record,
-        partition.rs:76-80). At scale this is a partition-pruned point
-        lookup when the partition is persisted bucketed by record_id."""
-        rows = (
-            self.at(threshold)
-            .where(F.col("record_id") == int(record_id))
-            .select("cluster_id")
-            .limit(1)
-            .collect()
-        )
-        return int(rows[0]["cluster_id"]) if rows else None
+        ``threshold``, or None when the record is not in the space
+        (reference find_entity_for_record, partition.rs:76-80): a read
+        of the index's label row, or a filtered collect of
+        ``at(threshold)`` above the index bound."""
+        t_fp = _threshold_fp(threshold)
+        index = self._point_index()
+        if index is None:
+            rows = (
+                self.at(threshold)
+                .where(F.col("record_id") == int(record_id))
+                .select("cluster_id")
+                .limit(1)
+                .collect()
+            )
+            return int(rows[0]["cluster_id"]) if rows else None
+        i = index.position(int(record_id))
+        return None if i is None else int(index.nodes[index.labels(t_fp)[0][i]])
 
     def merges_affecting_record(self, record_id: int) -> list[dict]:
         """P5: every merge event whose merging clusters contain the
@@ -347,9 +464,7 @@ class Collection:
         while t <= stop + 1e-9:
             pts.append(round(t, 9))
             t += step
-        if self._n_records is None:
-            self._n_records = self.records.select("record_id").distinct().count()
-        n_records = self._n_records
+        n_records = self._record_counts()[0]
         if len(pts) * n_records > max_cells:
             # replay the dendrogram itself through the sized sweep to
             # recover (left_size, right_size): merge edges are a

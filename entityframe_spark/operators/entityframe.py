@@ -15,12 +15,14 @@ reference's incremental O(k) update design (algorithms.md:671-786).
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from entityframe_spark.core.quantize import PRECISION_FACTOR, threshold_to_fp
+from entityframe_spark.operators import hierarchy
 from entityframe_spark.operators import metrics as M
 from entityframe_spark.operators.collection import Collection
 
@@ -413,11 +415,24 @@ class EntityFrame:
         One expression  -> per-threshold stats (entity_count, entropy).
         Two expressions -> pairwise comparison metrics over the
         cartesian product of the two threshold grids.
+        Three or more   -> consensus metrics over the cartesian product
+        of all grids; collected to the driver, so a product above
+        ``hierarchy._MAX_LOCAL_CELLS`` rows raises ValueError (use
+        ``analyse_df`` for those).
         """
         if len(expressions) == 1:
             return self._analyse_single(expressions[0], metrics)
         if len(expressions) == 2:
             return self._analyse_pair(expressions[0], expressions[1], metrics)
+        n_rows = math.prod(len(e.thresholds) for e in expressions)
+        if n_rows > hierarchy._MAX_LOCAL_CELLS:
+            raise ValueError(
+                f"{len(expressions)}-way analyse over grids of sizes "
+                f"{[len(e.thresholds) for e in expressions]} yields {n_rows} "
+                f"rows (> {hierarchy._MAX_LOCAL_CELLS}), too many to collect "
+                "to the driver; use analyse_df, which returns them as a "
+                "DataFrame"
+            )
         rows = self._nway_df(list(expressions), metrics).collect()
         return [r.asDict() for r in rows]
 
@@ -441,8 +456,6 @@ class EntityFrame:
             # evaluate over the FRAME's shared record space: records the
             # collection never saw are isolates (singletons), matching
             # the reference's shared-DataContext semantics
-            from entityframe_spark.operators import hierarchy
-
             mem = hierarchy.memberships_for_grid(
                 coll.merge_edges, self.records, fps
             )
@@ -473,8 +486,6 @@ class EntityFrame:
         n_rec = self._record_count(recs)
         max_cells = getattr(self, "single_sweep_max_cells", 50_000_000)
         if len(expr.thresholds) * n_rec > max_cells:
-            from entityframe_spark.operators import hierarchy
-
             sized = hierarchy.build_merge_edges_sized(
                 coll.merge_edges.select(
                     F.col("child").alias("src"),

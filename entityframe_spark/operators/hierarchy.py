@@ -53,6 +53,13 @@ tune_allocator()
 
 MERGE_EDGE_SCHEMA = "threshold_fp long, child long, parent long"
 
+# single-task bounds of a whole-dendrogram reconstruction: merge edges
+# per task, and |grid| x records label cells per task. Shared by
+# memberships_for_grid's fused route and Collection's driver-side
+# point-query index.
+_LOCAL_MERGE_EDGES = 20_000_000
+_MAX_LOCAL_CELLS = 50_000_000
+
 
 def _sweep_arrays(pdf: pd.DataFrame):
     """pandas adapter over :func:`_sweep_arrays_np` (tests and small
@@ -564,17 +571,121 @@ def partition_at(
     )
 
 
+def _record_ids(records: DataFrame) -> DataFrame:
+    """The record space as distinct ``record_id`` rows."""
+    return records.select("record_id").dropDuplicates(["record_id"])
+
+
+def _dendrogram_stream(records: DataFrame, merge_edges: DataFrame, *keys: str) -> DataFrame:
+    """The tagged union a whole-dendrogram reconstruction reads: record
+    rows (``_is_rec`` true) carry ``record_id``, merge-edge rows carry
+    threshold_fp/child/parent, and the other long columns hold 0.
+    ``keys`` columns, present on both inputs, lead every row.
+
+    No column holds a null: pandas turns a long column with nulls into
+    float64, which rounds 64-bit hash record ids (``intern_records(...,
+    dense_ids=False)``) to the nearest double."""
+    zero = F.lit(0).cast("long")
+    return records.select(
+        *keys,
+        F.lit(True).alias("_is_rec"),
+        "record_id",
+        zero.alias("threshold_fp"),
+        zero.alias("child"),
+        zero.alias("parent"),
+    ).unionAll(
+        merge_edges.select(
+            *keys, F.lit(False).alias("_is_rec"), zero.alias("record_id"),
+            "threshold_fp", "child", "parent",
+        )
+    )
+
+
+def _dendrogram_counts(record_ids: DataFrame, merge_edges: DataFrame) -> tuple[int, int]:
+    """(distinct records, merge edges) from one query (r6): a tagged
+    union partial-aggregates map-side, so both counts come from one
+    pass over the two inputs instead of two sequential count queries."""
+    cnt = {
+        int(r["_side"]): int(r["n"])
+        for r in record_ids.select(F.lit(0).alias("_side"))
+        .unionAll(merge_edges.select(F.lit(1).alias("_side")))
+        .groupBy("_side")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    return cnt.get(0, 0), cnt.get(1, 0)
+
+
+def _split_stream(frames) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """(record_id, threshold_fp, child, parent) int64 arrays from the
+    pandas frames of a :func:`_dendrogram_stream`."""
+    cols: dict[str, list[np.ndarray]] = {
+        c: [] for c in ("record_id", "threshold_fp", "child", "parent")
+    }
+    for b in frames:
+        is_rec = b["_is_rec"].to_numpy(dtype=bool)
+        for c, rows in cols.items():
+            keep = is_rec if c == "record_id" else ~is_rec
+            if keep.any():
+                rows.append(b[c].to_numpy(dtype=np.int64)[keep])
+    return tuple(
+        parts[0] if len(parts) == 1 else np.concatenate(parts or [np.empty(0, np.int64)])
+        for parts in cols.values()
+    )
+
+
+def _edge_indices(
+    nodes: np.ndarray, tf: np.ndarray, ch: np.ndarray, pa: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(ch_idx, pa_idx, tf) for :func:`uf_native.grid_labels_native`:
+    merge edges in descending threshold (stable), endpoints as indices
+    into the sorted record ids ``nodes``.
+
+    Raises ValueError when an endpoint is not in ``nodes``: an
+    out-of-range index would make uf_grid_labels read/write parent[]
+    out of bounds — silent corruption (ADVICE r4)."""
+    order = np.argsort(-tf, kind="stable")
+    ch, pa, tf = ch[order], pa[order], tf[order]
+    ch_idx = np.searchsorted(nodes, ch)
+    pa_idx = np.searchsorted(nodes, pa)
+    for idx_arr, vals, what in ((ch_idx, ch, "child"), (pa_idx, pa, "parent")):
+        bad = (idx_arr >= len(nodes)) | (
+            nodes[np.minimum(idx_arr, len(nodes) - 1)] != vals
+        )
+        if bad.any():
+            missing = np.unique(vals[bad])[:10]
+            raise ValueError(
+                f"merge edges reference {what} record ids absent from "
+                f"records (first missing: {missing.tolist()}); every "
+                "merge-edge endpoint must appear in the records frame"
+            )
+    return ch_idx, pa_idx, tf
+
+
+def _dendrogram_arrays(
+    rid: np.ndarray, tf: np.ndarray, ch: np.ndarray, pa: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """(nodes, ch_idx, pa_idx, tf) for one reconstruction: ``nodes`` the
+    sorted distinct record ids, the rest as :func:`_edge_indices`."""
+    if not len(rid) and len(ch):
+        raise ValueError(
+            "merge edges arrived with no record rows; every merge-edge "
+            "endpoint must appear in the records frame"
+        )
+    nodes = np.unique(rid)
+    return (nodes, *_edge_indices(nodes, tf, ch, pa))
+
+
 def memberships_for_grid(
     merge_edges: DataFrame,
     records: DataFrame,
     thresholds_fp: list[int],
-    local_threshold: int = 20_000_000,
-    max_local_cells: int = 50_000_000,
+    local_threshold: int = _LOCAL_MERGE_EDGES,
+    max_local_cells: int = _MAX_LOCAL_CELLS,
 ) -> DataFrame:
     """A17 sweep support: memberships for a whole threshold grid in ONE
-    pass — per-component local reconstruction via cogrouped
-    applyInPandas, emitting (threshold_fp, record_id, cluster_id) for
-    every grid point.
+    pass — the grid union-find kernel inside mapInPandas tasks, emitting
+    (threshold_fp, record_id, cluster_id) for every grid point.
 
     The output is |grid| x n rows; downstream metric sweeps consume it
     with a single grouped aggregation instead of per-threshold jobs
@@ -583,7 +694,7 @@ def memberships_for_grid(
     Routing: when the dendrogram fits one task (merge edges <=
     ``local_threshold``) AND the output stays bounded (|grid| x
     records <= ``max_local_cells``), the whole grid reconstruction
-    runs as ONE cogrouped Arrow task — the grid kernel's union-find
+    runs as ONE Arrow task — the grid kernel's union-find
     handles multiple components natively, so the global-CC job and the
     two component-tag joins are pure overhead at that size. Larger
     inputs fan out over hash-BUCKETED components (one kernel run per
@@ -593,66 +704,19 @@ def memberships_for_grid(
     sweep_stats_from_merges, which never materialises cells at all.
     """
     grid = sorted({int(t) for t in thresholds_fp}, reverse=True)
-    rec0 = records.select("record_id").dropDuplicates(["record_id"])
-    grid_list = list(grid)
+    rec0 = _record_ids(records)
+    grid_arr = np.array(grid, dtype=np.int64)  # descending
 
     def run(batches):
-        """mapInPandas body over the tagged union stream (record rows
-        carry record_id, merge-edge rows carry threshold_fp/child/
-        parent): ONE kernel run per task, output yielded in
-        _YIELD_CHUNK frames — the old cogroup path returned up to
-        max_local_cells (~1.2+ GB) as a single pandas DataFrame plus
-        its Arrow conversion copy (ADVICE r4)."""
-        rid_p, ch_p, pa_p, tf_p = [], [], [], []
-        for b in batches:
-            is_rec = b["child"].isna()
-            r = b.loc[is_rec, "record_id"]
-            if len(r):
-                rid_p.append(r.to_numpy(dtype=np.int64))
-            m = b.loc[~is_rec]
-            if len(m):
-                ch_p.append(m["child"].to_numpy(dtype=np.int64))
-                pa_p.append(m["parent"].to_numpy(dtype=np.int64))
-                tf_p.append(m["threshold_fp"].to_numpy(dtype=np.int64))
-        if not rid_p:
-            if ch_p:
-                raise ValueError(
-                    "merge edges arrived in a task with no record rows; "
-                    "memberships_for_grid requires every merge-edge "
-                    "endpoint to appear in the records frame"
-                )
-            return
-        nodes = np.sort(np.concatenate(rid_p) if len(rid_p) > 1 else rid_p[0])
-        if ch_p:
-            ch = np.concatenate(ch_p) if len(ch_p) > 1 else ch_p[0]
-            pa = np.concatenate(pa_p) if len(pa_p) > 1 else pa_p[0]
-            tf = np.concatenate(tf_p) if len(tf_p) > 1 else tf_p[0]
-            order = np.argsort(-tf, kind="stable")
-            ch, pa, tf = ch[order], pa[order], tf[order]
-        else:
-            ch = pa = tf = np.empty(0, dtype=np.int64)
-        grid_arr = np.array(grid_list, dtype=np.int64)  # already descending
-
-        ch_idx = np.searchsorted(nodes, ch)
-        pa_idx = np.searchsorted(nodes, pa)
-        # contract check BEFORE the kernel: an out-of-range searchsorted
-        # index would make uf_grid_labels read/write parent[] out of
-        # bounds — silent corruption where the old pure-Python path
-        # raised a KeyError (ADVICE r4)
-        for idx_arr, vals, what in ((ch_idx, ch, "child"), (pa_idx, pa, "parent")):
-            bad = (idx_arr >= len(nodes)) | (
-                nodes[np.minimum(idx_arr, len(nodes) - 1)] != vals
-            )
-            if bad.any():
-                missing = np.unique(vals[bad])[:10]
-                raise ValueError(
-                    f"merge edges reference {what} record ids absent from "
-                    f"records (first missing: {missing.tolist()}); "
-                    "memberships_for_grid requires every merge-edge "
-                    "endpoint to appear in the records frame"
-                )
-
+        """mapInPandas body over the tagged union stream: ONE kernel run
+        per task, output yielded in _YIELD_CHUNK frames — the old
+        cogroup path returned up to max_local_cells (~1.2+ GB) as a
+        single pandas DataFrame plus its Arrow conversion copy (ADVICE
+        r4)."""
+        nodes, ch_idx, pa_idx, tf = _dendrogram_arrays(*_split_stream(batches))
         n = len(nodes)
+        if not n:
+            return
         # C kernel: O(edges + grid*nodes) with no per-edge Python;
         # handles multiple components in one batch natively
         labels_idx = uf_native.grid_labels_native(ch_idx, pa_idx, tf, n, grid_arr)
@@ -670,35 +734,15 @@ def memberships_for_grid(
                 )
 
     out_schema = "threshold_fp long, record_id long, cluster_id long"
-    _null = F.lit(None).cast("long")
-
-    # both routing probes in ONE job (r6): a tagged union partial-
-    # aggregates map-side, so this is two tiny concurrent scans
-    # instead of two sequential count jobs
-    _cnt = {
-        int(r["_side"]): int(r["n"])
-        for r in rec0.select(F.lit(0).alias("_side"))
-        .unionAll(merge_edges.select(F.lit(1).alias("_side")))
-        .groupBy("_side")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    n_rec = _cnt.get(0, 0)
-    n_me = _cnt.get(1, 0)
+    n_rec, n_me = _dendrogram_counts(rec0, merge_edges)
     if local_threshold:
         if n_me <= local_threshold and n_rec * max(len(grid), 1) <= max_local_cells:
             # fused: whole dendrogram + record space through one task
-            stream = rec0.select(
-                F.col("record_id"),
-                _null.alias("threshold_fp"),
-                _null.alias("child"),
-                _null.alias("parent"),
-            ).unionAll(
-                merge_edges.select(
-                    _null.alias("record_id"), "threshold_fp", "child", "parent"
-                )
+            return (
+                _dendrogram_stream(rec0, merge_edges)
+                .repartition(1)
+                .mapInPandas(run, schema=out_schema)
             )
-            return stream.repartition(1).mapInPandas(run, schema=out_schema)
 
     # component id per record over the FULL edge set; isolates get their own
     all_comps = connected_components(merge_edges, "child", "parent")
@@ -748,19 +792,9 @@ def memberships_for_grid(
         -(-(n_rec * max(len(grid), 1)) // max(max_local_cells, 1)),
         -(-n_me // 5_000_000),
     )
-    stream = rec.select(
-        F.col("_comp"),
-        F.col("record_id"),
-        _null.alias("threshold_fp"),
-        _null.alias("child"),
-        _null.alias("parent"),
-    ).unionAll(
-        me.select(
-            "_comp", _null.alias("record_id"), "threshold_fp", "child", "parent"
-        )
-    )
     return (
-        stream.repartition(int(n_buckets), "_comp")
+        _dendrogram_stream(rec, me, "_comp")
+        .repartition(int(n_buckets), "_comp")
         .drop("_comp")
         .mapInPandas(run, schema=out_schema)
     )

@@ -5,6 +5,7 @@ import numpy as np
 import pytest
 
 from entityframe_spark.operators.components import (
+    _ckpt_unpersist,
     connected_components,
     connected_components_blocked,
 )
@@ -177,3 +178,16 @@ def test_distributed_rounds_do_not_touch_foreign_persists(spark):
     assert not missing, f"loop unpersisted foreign ids: {missing}"
     assert foreign.count() == 100
     foreign.unpersist()
+
+
+def test_ckpt_unpersist_releases_local_checkpoint(spark):
+    """Canary for the private JVM path _ckpt_unpersist takes (it
+    swallows errors): if a Spark upgrade breaks it, the checkpointed
+    RDD stays persisted and this fails instead of leaking silently."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    df = spark.range(100).localCheckpoint(eager=True)
+    created = set(jsc.getPersistentRDDs().keys()) - before
+    assert created, "localCheckpoint persisted no RDD"
+    _ckpt_unpersist(df)
+    assert not created & set(jsc.getPersistentRDDs().keys())

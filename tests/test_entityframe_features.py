@@ -142,6 +142,25 @@ def test_analyse_three_expressions_consensus(spark):
     assert abs(row["agreement"] - 1.0) < 1e-9
 
 
+def test_analyse_nway_collect_gated_by_cells_bound(spark):
+    """analyse() collects the n-way product of grids to the driver: past
+    the cells bound it raises and points to analyse_df; small products
+    still return rows."""
+    from entityframe_spark.operators.collection import Collection
+    from entityframe_spark.operators.entityframe import EntityFrame, col
+
+    ef = EntityFrame()
+    for name in ("m1", "m2", "m3"):
+        ef.add_collection(
+            name, Collection.from_edges(spark, [("a", "b", 0.9), ("b", "c", 0.6)], source="s")
+        )
+    fine = col("m1").sweep(0.0, 1.0, 0.001)  # 1001 points: 1001^3 rows
+    with pytest.raises(ValueError, match="analyse_df"):
+        ef.analyse(fine, fine, fine)
+    res = ef.analyse(col("m1").sweep(0.5, 0.9, 0.4), col("m2").at(0.7), col("m3").at(0.5))
+    assert sorted(r["m1_threshold"] for r in res) == [0.5, 0.9]
+
+
 # ---------------------------------------------------------------------------
 # S8/S9: 5-table persistence round-trip
 # ---------------------------------------------------------------------------
